@@ -62,6 +62,8 @@ STALE_LOCK_S = 120.0
 # Overridable per table via configuration "meta.checkpoint.interval".
 FULL_SNAPSHOT_INTERVAL = int(
     os.environ.get("STARLAKE_CHECKPOINT_INTERVAL", "10"))
+# resolved snapshots a ManifestStore handle keeps (oldest evicted first)
+SNAP_CACHE_SIZE = 8
 
 
 class MetaError(Exception):
@@ -661,10 +663,15 @@ class ManifestStore:
                 last_info_commit=top.get("last_info_commit", 0),
                 last_info_version=top.get("last_info_version", 0),
             )
-        if len(self._snap_cache) >= 8:
-            self._snap_cache.pop(next(iter(self._snap_cache)))
-        self._snap_cache[v] = base
+        self._cache_snapshot(base)
         return base
+
+    def _cache_snapshot(self, snap: Snapshot) -> None:
+        """Insert into the bounded snapshot cache (oldest entry out)."""
+        if snap.version not in self._snap_cache \
+                and len(self._snap_cache) >= SNAP_CACHE_SIZE:
+            self._snap_cache.pop(next(iter(self._snap_cache)))
+        self._snap_cache[snap.version] = snap
 
     def list_versions(self) -> list[int]:
         return sorted(self._version_numbers())
@@ -844,7 +851,7 @@ class ManifestStore:
                             self._publish_version(txn, snap, payload)
                         except VersionExistsError:
                             continue
-                        self._snap_cache[snap.version] = snap
+                        self._cache_snapshot(snap)
                         txn.committed = True
                         return snap
                 finally:
@@ -871,7 +878,7 @@ class ManifestStore:
                         f"{self.table_path} (lease expired or arbiter "
                         "restarted) — retry")
                 self._publish_version(txn, snap, payload)
-                self._snap_cache[snap.version] = snap
+                self._cache_snapshot(snap)
                 txn.committed = True
                 return snap
             finally:
@@ -1121,7 +1128,7 @@ class ManifestStore:
                         f"{self.table_path} (lease expired or arbiter "
                         "restarted) — retry")
                 _exclusive_write(self._version_path(snap.version), payload)
-                self._snap_cache[snap.version] = snap
+                self._cache_snapshot(snap)
                 return snap
             finally:
                 if pub is not None:

@@ -8,14 +8,16 @@ collects the written files into DataFileInfo rows for the meta commit.
 
 Spark-first translation: ``df.repartition(n, *hash_cols)`` assigns each
 row to partition ``pmod(murmur3(hash_cols), n)`` — that partition id IS
-the bucket id and is stable across commits for a fixed ``n``, so delta
-files line up with base files bucket-by-bucket (same property the
-reference gets from BucketingUtils). ``sortWithinPartitions(range_cols +
-hash_cols)`` both satisfies the dynamic-partition-write required
-ordering (so Spark inserts no extra sort) and keeps rows key-sorted
-inside every file. Files land in a per-commit directory
-(``data/<commit_id>/``) so they are invisible until the manifest commit
-publishes them — the atomicity trick of Delta-style log stores.
+the bucket id (a hash write runs without AQE when AQE could coalesce
+that exchange; see _bucket_layout_needs_static_plan) and is stable
+across commits for a fixed ``n``, so delta files line up with base
+files bucket-by-bucket (same property the reference gets from
+BucketingUtils). ``sortWithinPartitions(range_cols + hash_cols)`` both
+satisfies the dynamic-partition-write required ordering (so Spark
+inserts no extra sort) and keeps rows key-sorted inside every file.
+Files land in a per-commit directory (``data/<commit_id>/``) so they
+are invisible until the manifest commit publishes them — the atomicity
+trick of Delta-style log stores.
 
 Scale note: one file per (partition, bucket) per commit means write
 parallelism = bucket_num × touched partitions; pick bucket_num so that
@@ -28,6 +30,7 @@ import json
 import os
 import re
 import shutil
+import threading
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -35,6 +38,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from starlake_spark.meta import DataFileInfo, TableInfo, Transaction
 
 _BUCKET_RE = re.compile(r"part-(\d+)")
+# adaptive bloom candidates: 1 MB (parquet.bloom.filter.max.bytes) halved
+# 15 times is parquet-mr's 32-byte bitset lower bound. parquet-mr itself
+# drops every candidate too small for 500 values, so at the default FPP
+# (0.01) the smallest bitset written is 1 KB.
+_BLOOM_CANDIDATES = 16
 
 
 def table_schema(info: TableInfo) -> T.StructType:
@@ -425,15 +433,16 @@ def _aqe_pointless(df: DataFrame) -> bool:
     """True when adaptive execution cannot improve this write's plan:
     no Join and no Aggregate anywhere below the write (AQE re-plans
     join strategies, splits skewed joins, and coalesces shuffle
-    partitions — but it never touches an explicit fixed-N repartition,
-    which is exactly what the bucketed write layout uses). For such
-    narrow scan→project→repartition→sort pipelines AQE only *costs*: it
-    splits the commit into a shuffle-materialization stage plus a write
-    stage — one extra scheduling round-trip and shuffle spill per
-    commit, which doubles the latency of small (CDC-trickle) commits.
-    Probe is O(1): TreeNode caches its pattern bitset, and analysis of
-    the frame has already run (normalize_for_write touched the schema).
-    ``STARLAKE_WRITE_AQE=keep`` disables the optimization."""
+    partitions). For such narrow scan→project→repartition→sort
+    pipelines AQE only *costs*: it splits the commit into a
+    shuffle-materialization stage plus a write stage — one extra
+    scheduling round-trip and shuffle spill per commit, which doubles
+    the latency of small (CDC-trickle) commits. Probe is O(1): TreeNode
+    caches its pattern bitset, and analysis of the frame has already run
+    (normalize_for_write touched the schema). ``STARLAKE_WRITE_AQE=keep``
+    disables this latency optimization; it does not affect the hash
+    writes of _bucket_layout_needs_static_plan, which turn AQE off for
+    correctness."""
     if os.environ.get("STARLAKE_WRITE_AQE") == "keep":
         return False
     try:
@@ -445,22 +454,56 @@ def _aqe_pointless(df: DataFrame) -> bool:
         return False
 
 
+def _bucket_layout_needs_static_plan(spark: SparkSession,
+                                     info: TableInfo) -> bool:
+    """True when AQE could break ``part-<n> == bucket id`` for a write
+    into this hash table. The id holds while the last exchange is
+    hashpartitioning(hash_cols, bucket_num) with every partition intact.
+    AQE never coalesces or locally reads the writer's explicit
+    repartition(bucket_num, hash_cols); but Spark drops that repartition
+    as redundant when the source already has the same partitioning (a
+    MoR-merged scan grouped by the keys), and AQE may then coalesce the
+    source's exchange into one file holding keys of every bucket. An
+    Aggregate or Join exchange has bucket_num partitions only when
+    bucket_num is AQE's initial shuffle partition count."""
+    if not info.hash_cols:
+        return False
+    conf = spark.conf
+    initial = conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None)
+    n = initial or conf.get("spark.sql.shuffle.partitions")
+    return info.bucket_num == int(n)
+
+
+# session id -> [writers inside _save_no_aqe, AQE setting to restore]
+_no_aqe_writers: dict[int, list] = {}
+_no_aqe_lock = threading.Lock()
+
+
 def _save_no_aqe(spark: SparkSession, writer, abs_dir: str) -> None:
-    """Execute the write with AQE off (join/agg-free plans only —
-    see _aqe_pointless). Session-conf flip: a concurrent thread that
-    plans a query inside this window loses AQE for that one plan (a
-    latency matter, never correctness); single-writer sessions — the
-    norm — are unaffected."""
+    """Execute the write with AQE off (the hash writes of
+    _bucket_layout_needs_static_plan, and the join/agg-free plans of
+    _aqe_pointless). Session-conf flip, reference-counted so that
+    concurrent writers of one session keep it off until the last of them
+    has planned its write. A non-writer thread that plans a query inside
+    this window loses AQE for that one plan (a latency matter, never
+    correctness)."""
     key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    if prev != "true":
-        writer.save(abs_dir)
-        return
-    spark.conf.set(key, "false")
+    sid = id(spark)
+    with _no_aqe_lock:
+        ent = _no_aqe_writers.get(sid)
+        if ent is None:
+            ent = _no_aqe_writers[sid] = [0, spark.conf.get(key, "true")]
+            spark.conf.set(key, "false")
+        ent[0] += 1
     try:
         writer.save(abs_dir)
     finally:
-        spark.conf.set(key, prev)
+        with _no_aqe_lock:
+            ent[0] -= 1
+            if ent[0] == 0:
+                del _no_aqe_writers[sid]
+                spark.conf.set(key, ent[1])
 
 
 def _list_written_files(abs_dir: str) -> list[str]:
@@ -475,6 +518,16 @@ def _list_written_files(abs_dir: str) -> list[str]:
         if n.endswith(".parquet") and not n.startswith((".", "_")):
             out.append(ent.path)
     return out
+
+
+def _remove_written_file(fp: str) -> None:
+    """Delete one unpublished task output and its hadoop checksum."""
+    crc = os.path.join(os.path.dirname(fp), f".{os.path.basename(fp)}.crc")
+    for p in (fp, crc):
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
 
 
 def _range_value_of(file_path: str, base_dir: str, range_cols: list[str]) -> str:
@@ -690,29 +743,34 @@ def write_files(
     # `bloom.index.cols` table property (comma-separated, '' disables).
     bloom_cols = (info.configuration or {}).get(
         "bloom.index.cols", ",".join(info.hash_cols))
+    # Each bitset is sized to the rows ACTUALLY written (parquet-mr
+    # adaptive mode, PARQUET-2254). Without it every bitset is sized for
+    # parquet.bloom.filter.expected.ndv (1M), ~1 MB per file whatever
+    # its content. Adaptive mode tracks candidate bitsets during the
+    # write and keeps the smallest one that meets the FPP target;
+    # candidate i is max.bytes (1 MB) / 2^i. The default 5 candidates
+    # floor every file at 64 KB — most of a small delta file's bytes —
+    # so ask for enough candidates to reach the smallest size
+    # (_BLOOM_CANDIDATES). parquet-mr reads the candidate count per
+    # column only: the un-suffixed key is ignored. Same columns, same
+    # FPP, so point-lookup row-group skipping is unchanged; large files
+    # still keep the full-size bitset.
     any_bloom = False
     for c in [c.strip() for c in bloom_cols.split(",") if c.strip()]:
         if c in df.columns:
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+            writer = (writer
+                      .option(f"parquet.bloom.filter.enabled#{c}", "true")
+                      .option(f"parquet.bloom.filter.candidates.number#{c}",
+                              str(_BLOOM_CANDIDATES)))
             any_bloom = True
-    if any_bloom and os.environ.get("STARLAKE_BLOOM_ADAPTIVE", "on") != "off":
-        # Size the bloom bitset to the rows ACTUALLY written
-        # (parquet-mr adaptive mode, PARQUET-2254): the default sizes
-        # every bitset for parquet.bloom.filter.expected.ndv (1M) —
-        # about 1 MB per file — regardless of content, so a small delta
-        # commit (CDC trickle, MoR upsert, IVF cell files) was ~95%
-        # bloom bitset by bytes. Adaptive mode tracks candidate bitsets
-        # during the write and keeps the smallest one meeting the FPP
-        # target, so small files carry KB-scale blooms while large
-        # files keep the full-size bitset (verified: 2M-row file sizes
-        # identically either way). Same FPP, same point-lookup
-        # skipping; only the bitset allocation is right-sized.
+    if any_bloom:
         writer = writer.option("parquet.bloom.filter.adaptive.enabled",
                                "true")
     if info.range_cols:
         writer = writer.partitionBy(*info.range_cols)
     try:
-        if _aqe_pointless(df):
+        if _bucket_layout_needs_static_plan(spark, info) \
+                or _aqe_pointless(df):
             _save_no_aqe(spark, writer, abs_dir)
         else:
             writer.save(abs_dir)
@@ -745,6 +803,13 @@ def write_files(
         m = _BUCKET_RE.search(os.path.basename(fp))
         bucket = int(m.group(1)) if (m and info.hash_cols) else -1
         stats, num_rows = _footer_stats(fp)
+        if num_rows == 0:
+            # Spark's task 0 writes a file even when its partition is
+            # empty; recording it would make every later scan of that
+            # bucket open a file with no rows. Unreadable footers (-1)
+            # are kept. The commit dir is unpublished, so drop it here.
+            _remove_written_file(fp)
+            continue
         files.append(
             DataFileInfo(
                 path=os.path.relpath(fp, txn.store.table_path),

@@ -211,6 +211,28 @@ def test_sql_optimize_zorder_routes_to_zorder(spark, tmp_path):
     t.drop_table()
 
 
+def _parquet_blooms(spark, path):
+    """{column: (bloom offset, bitset bytes or None)} of the first row
+    group, read through parquet-mr's own reader."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    inf = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path(path), conf)
+    rdr = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(inf)
+    try:
+        cols = rdr.getFooter().getBlocks().get(0).getColumns()
+        out = {}
+        for i in range(cols.size()):
+            c = cols.get(i)
+            bf = rdr.readBloomFilter(c)
+            out[c.getPath().toDotString()] = (
+                c.getBloomFilterOffset(),
+                None if bf is None else bf.getBitsetSize())
+        return out
+    finally:
+        rdr.close()
+
+
 def test_parquet_bloom_index_written_for_hash_cols(spark, tmp_table_dir):
     """Point-lookup skipping inside files: data files of a hash table
     carry a parquet-native Bloom filter on the hash columns (consumed
@@ -225,18 +247,7 @@ def test_parquet_bloom_index_written_for_hash_cols(spark, tmp_table_dir):
                      hash_partitions=["o_orderkey"], hash_bucket_num=4)
 
     def bloom_offsets(path):
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        inf = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            jvm.org.apache.hadoop.fs.Path(path), conf)
-        rdr = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(inf)
-        try:
-            cols = rdr.getFooter().getBlocks().get(0).getColumns()
-            return {cols.get(i).getPath().toDotString():
-                    cols.get(i).getBloomFilterOffset()
-                    for i in range(cols.size())}
-        finally:
-            rdr.close()
+        return {c: off for c, (off, _) in _parquet_blooms(spark, path).items()}
 
     f = t.store.snapshot().all_files()[0]
     offs = bloom_offsets(os.path.join(tmp_table_dir, f.path))
@@ -251,6 +262,43 @@ def test_parquet_bloom_index_written_for_hash_cols(spark, tmp_table_dir):
     newest = max(t.store.snapshot().all_files(), key=lambda x: x.write_version)
     offs2 = bloom_offsets(os.path.join(tmp_table_dir, newest.path))
     assert offs2["o_orderkey"] == -1
+
+
+def test_parquet_bloom_bitset_sized_to_file_rows(spark, tmp_table_dir):
+    """Adaptive bloom sizing reaches small files: a tiny delta commit
+    keeps its bloom on the hash column (same FPP) at a bitset of at most
+    1 KB, not a fixed 64 KB floor, and a 2k-row file gets the
+    FPP-optimal bitset for its NDV. Lookups stay exact."""
+    import os
+
+    t = create_table(spark, spark.range(2000).withColumnRenamed("id", "k")
+                     .withColumn("v", F.col("k") * 3), tmp_table_dir,
+                     hash_partitions=["k"], hash_bucket_num=1)
+    base, = t.store.snapshot().all_files()
+    assert base.num_rows == 2000
+    off, size = _parquet_blooms(
+        spark, os.path.join(tmp_table_dir, base.path))["k"]
+    assert off >= 0
+    jvm = spark._jvm
+    fpp = float(spark._jsc.hadoopConfiguration().get(
+        "parquet.bloom.filter.fpp", "0.01"))
+    optimal = jvm.org.apache.parquet.column.values.bloomfilter \
+        .BlockSplitBloomFilter.optimalNumOfBits(2000, fpp) // 8
+    # the smallest power-of-two bitset holding 2000 keys at the FPP
+    assert optimal <= size < 2 * optimal
+
+    t.upsert(spark.range(5000, 5050).withColumnRenamed("id", "k")
+             .withColumn("v", F.lit(-1).cast("long")))
+    delta, = [f for f in t.store.snapshot().all_files() if not f.is_base_file]
+    blooms = _parquet_blooms(spark, os.path.join(tmp_table_dir, delta.path))
+    off, size = blooms["k"]
+    assert off >= 0 and size <= 1024
+    assert blooms["v"] == (-1, None)
+
+    for k, v in [(7, 21), (1999, 5997), (5000, -1), (5049, -1)]:
+        assert [r["v"] for r in t.to_df(where=f"k = {k}").collect()] == [v]
+    for k in (-1, 2000, 4999, 5050):
+        assert t.to_df(where=f"k = {k}").count() == 0
 
 
 def test_skipping_handles_in_between_and_mixed_predicates(spark, tmp_table_dir):
