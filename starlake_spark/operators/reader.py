@@ -17,12 +17,21 @@ here (SURVEY §2.1):
   via ``max_by`` over a per-group constant version column, or a merge
   operator (starlake_spark.merge_ops) instead of last-wins.
 
+Both recipes read every commit group through ONE parquet relation when
+the groups are schema-homogeneous (``_flat_read_plan``); each row's
+commit version and range values are per-file constants, served by one
+probe per row into a literal map built at plan time (``_flat_probe``).
+Other histories take a union of per-commit reads.
+
 The reference does the same collapse with a per-bucket k-way heap merge
 (v2/merge/parquet/MergeHeap.java, MergeMultiFileWithOperator.scala:35-196)
 because its files are bucket-sorted; Spark's hash aggregate gives the
 identical result order-insensitively, spills natively, and is split
-across executors by AQE. Partitions that need no merge are unioned in
-via the plain path so compacted data never pays the shuffle.
+across executors by AQE. A merge whose files all sit in one bucket and
+fit one read split — a point lookup — runs as the reference's one task
+per bucket instead: one partition, no Exchange (``_one_task_merge``).
+Partitions that need no merge are unioned in via the plain path so
+compacted data never pays the shuffle.
 
 Scale note: the MoR groupBy shuffles only the *un-compacted* partitions'
 bytes on the hash keys. Regular compaction (CompactionCommand analogue)
@@ -185,25 +194,18 @@ def _file_spark_schema(abs_path: str) -> "T.StructType | None":
     return out
 
 
-# The flat scan reconstructs range values and commit dirs from
-# `_metadata.file_path`. Two encodings sit between the raw partition
-# value and that path: the writer hive-escapes special bytes in the
-# DIR NAME ('%' → %25, ':' → %3A, ...; space stays literal), and the
-# path column is then the URI-encoded form of the disk name (space →
-# %20, '%' → %25, ...; '+' stays literal). Both are plain %XX escapes,
-# so ``_decoded`` (one url_decode with a literal '+' protected first —
-# URLDecoder would otherwise turn it into a space) inverts one layer;
-# range values apply it twice, the commit-dir lookup (no hive layer)
-# once. Gate still refuses values a manifest range_value cannot
-# represent unambiguously (',' is its segment separator) and column
-# names that are not regex-literal safe.
-_RV_SAFE = re.compile(r"^[^,]+$")
-_COL_SAFE = re.compile(r"^[A-Za-z0-9_]+$")
+# Probe keys of the flat scan's per-file constants (``_flat_probe``):
+# the last ``1 + len(range_cols)`` dir segments of a file as
+# `_metadata.file_path` renders them — the URI form of a Hadoop Path
+# (space → %20, '%' → %25, non-ASCII literal). A suffix carries no
+# scheme, so 'file:/', 'file:///' and 's3a://b' renderings probe the
+# same key. ``_URI_SAFE`` segments read the same in both forms; any
+# other dir is encoded once through Hadoop's own Path (cached:
+# committed dirs are immutable), never by re-implementing URI quoting.
+_URI_SAFE = re.compile(r"^[A-Za-z0-9._=-]+$")
 _PCT = re.compile(r"%([0-9A-Fa-f]{2})")
-
-
-def _decoded(col: "F.Column") -> "F.Column":
-    return F.url_decode(F.regexp_replace(col, "[+]", "%2B"))
+_DIR_URI_CACHE: dict[str, str] = {}
+_DIR_URI_CACHE_MAX = 65536
 
 
 def _unescape_path(s: str) -> str:
@@ -212,32 +214,55 @@ def _unescape_path(s: str) -> str:
     return _PCT.sub(lambda m: chr(int(m.group(1), 16)), s)
 
 
+def _dir_key(abs_dir: str, levels: int) -> str:
+    """Probe key of the files directly under ``abs_dir``: its last
+    ``levels`` segments in `_metadata.file_path`'s URI form."""
+    segs = abs_dir.split("/")[-levels:]
+    if all(_URI_SAFE.match(s) for s in segs):
+        return "/".join(segs)
+    raw = _DIR_URI_CACHE.get(abs_dir)
+    if raw is None:
+        from pyspark import SparkContext
+
+        raw = SparkContext._jvm.org.apache.hadoop.fs.Path(
+            abs_dir).toUri().getRawPath()
+        if len(_DIR_URI_CACHE) >= _DIR_URI_CACHE_MAX:
+            _DIR_URI_CACHE.pop(next(iter(_DIR_URI_CACHE)))
+        _DIR_URI_CACHE[abs_dir] = raw
+    return "/".join(raw.split("/")[-levels:])
+
+
+def _path_key_col(path: "F.Column", levels: int) -> "F.Column":
+    """Per-row probe key: the last ``levels`` directory segments of a
+    file path — substring arithmetic, no regex, no decoding."""
+    return F.substring_index(F.substring_index(path, "/", -(levels + 1)),
+                             "/", levels)
+
+
 def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
                     per_row_cost: bool = True,
-                    ) -> "tuple[T.StructType, dict, bool] | None":
+                    ) -> "tuple[T.StructType, dict, bool, dict] | None":
     """Gate + inputs for the single-read scan of every commit group at
-    once (optimization round 10): returns ``(read_schema, dir→version
-    map, any_tomb)`` when ALL groups can be served by ONE parquet
+    once (optimization round 10): returns ``(read_schema, dir_map,
+    any_tomb, absent)`` when ALL groups can be served by ONE parquet
     relation with an explicit schema — every declared column present
     under its declared name and exact physical type in every group (no
     renames, no type widening, no nested evolution, no extra live
     columns), and every group's files mapping to one distinct version.
     The tombstone flag column may appear in any subset of groups (the
-    reader backfills null ⇒ not tombstoned). None ⇒ caller takes the
-    per-group union path, which handles every evolution case.
-    ``STARLAKE_FLAT_SCAN=off`` disables the fast path.
+    reader backfills null ⇒ not tombstoned); ``absent`` maps a column
+    to the versions whose files lack it (partial-column commits). None
+    ⇒ caller takes the per-group union path, which handles every
+    evolution case. ``STARLAKE_FLAT_SCAN=off`` disables the fast path.
 
-    Range-partitioned histories (round 11): the hive dirs live UNDER
-    each commit dir, which Spark's partition discovery rejects as
-    conflicting roots across commits — so the flat relation reads with
-    ``recursiveFileLookup`` (no discovery at all) and reconstructs each
-    range column from ``_metadata.file_path`` with one regexp per
-    column. That reconstruction is only byte-exact when the column
-    names and partition values are invariant under both hive escaping
-    and the file-path URI encoding (``_RV_SAFE`` — dates, ints, plain
-    strings; anything else refuses). The returned ``read_schema``
-    covers only the PHYSICAL columns; callers add the range columns
-    via ``_flat_range_exprs``.
+    ``dir_map`` holds the per-file constants ``_flat_probe`` serves:
+    ``_dir_key`` of each (commit, partition) dir → (commit version,
+    range values as the manifest records them, None for the hive
+    default partition) — exact whatever the values' escaping. The
+    returned ``read_schema`` covers only the PHYSICAL columns. Refused:
+    a file not under the hive dirs its range_value declares (a ',' in a
+    value, the range_value separator, shows as an extra segment), and
+    two dirs sharing a probe key.
 
     Scale note: this is the plan-size lever for MoR reads — the union
     path plans O(commit groups) parquet relations per scan while this
@@ -246,20 +271,19 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
     """
     if os.environ.get("STARLAKE_FLAT_SCAN") == "off":
         return None
-    if info.range_cols and not all(_COL_SAFE.match(c)
-                                   for c in info.range_cols):
-        return None
     if per_row_cost or info.range_cols:
-        # The flat relation derives the commit version / range values
-        # from _metadata.file_path PER ROW, while the union path gets
-        # them as per-branch literals / partition metadata. Cost model
-        # (measured, round 11): union ≈ groups × plan cost
-        # (~0.1-0.3 s each), flat overhead ≈ rows × ~0.25 s/M. So the
-        # flat path engages for delta-shaped histories (small average
-        # group — refresh windows, CDC boundaries, commit storms) and
-        # for DEEP histories (where union's plan size is the cliff the
-        # fast path exists to remove), but hands row-heavy shallow
-        # scans back to the union path.
+        # The flat relation probes its per-file constants PER ROW and
+        # merges through one relation, while the union path gets them
+        # as per-branch literals / partition metadata. Cost model
+        # (measured): union ≈ groups × plan cost (~0.1-0.3 s each),
+        # flat overhead ≈ rows × ~0.7 CPU-s/M (3M-row hash-only table,
+        # 2 commits, 4 cores: flat 7.1 vs union 5.0 CPU-s; 2.8 CPU-s/M
+        # back when each row parsed its path). So the flat path engages
+        # for delta-shaped histories (small average group — refresh
+        # windows, CDC boundaries, commit storms) and for DEEP
+        # histories (where union's plan size is the cliff the fast path
+        # exists to remove), but hands row-heavy shallow scans back to
+        # the union path.
         avg_cap = int(os.environ.get("STARLAKE_FLAT_SCAN_AVG_GROUP_BYTES",
                                      str(8 << 20)))
         deep = int(os.environ.get("STARLAKE_FLAT_SCAN_DEEP_GROUPS", "24"))
@@ -270,8 +294,10 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
     declared = {f.name: f.dataType for f in schema.fields}
     expected = set(declared) - set(info.range_cols)
     keys = set(info.range_cols) | set(info.hash_cols)
+    levels = 1 + len(info.range_cols)
     any_tomb = False
-    dir_wv: dict[str, int] = {}
+    dir_map: dict[str, tuple] = {}
+    key_dir: dict[str, str] = {}
     seen_wv: set[int] = set()
     absent: dict[str, set] = {}
     for (wv, _cdir), fs in groups.items():
@@ -290,45 +316,36 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
             # "absent = keep existing" survives (exactly the union
             # path's per-branch null-ordering literal)
             absent.setdefault(c, set()).add(wv)
-        d = None
-        for f in fs:
-            fa = f.path if os.path.isabs(f.path) else \
-                os.path.join(store.table_path, f.path)
-            fd = os.path.dirname(fa)
-            if info.range_cols:
-                # every file must sit under exactly the hive dirs its
-                # manifest range_value declares (dir segments unescape
-                # to the raw values) — the commit dir is what remains
-                # above them
-                segs = f.range_value.split(",") if f.range_value else []
-                if len(segs) != len(info.range_cols):
-                    return None
-                parts = fd.split("/")
-                if len(parts) <= len(segs):
-                    return None
-                dsegs = parts[-len(segs):]
-                ok = True
-                for c, seg, dseg in zip(info.range_cols, segs, dsegs):
-                    name, eq, val = seg.partition("=")
-                    dname, deq, dval = dseg.partition("=")
-                    if (name != c or dname != c or not eq or not deq
-                            or not _RV_SAFE.match(val)
-                            or _unescape_path(dval) != val):
-                        ok = False
-                        break
-                if not ok:
-                    return None
-                fd = "/".join(parts[: -len(segs)])
-            if d is None:
-                d = fd
-            elif fd != d:
-                return None  # nested layout: dir→version map ambiguous
-        if d in dir_wv and dir_wv[d] != wv:
-            return None
         if wv in seen_wv:
             return None  # equal-version groups: keep union-path order
         seen_wv.add(wv)
-        dir_wv[d] = wv
+        for f in fs:
+            fd = os.path.dirname(f.path if os.path.isabs(f.path) else
+                                 os.path.join(store.table_path, f.path))
+            vals = []
+            if info.range_cols:
+                # every file must sit under exactly the hive dirs its
+                # manifest range_value declares (dir segments unescape
+                # to the raw values)
+                segs = f.range_value.split(",") if f.range_value else []
+                parts = fd.split("/")
+                if len(segs) != len(info.range_cols) or \
+                        len(parts) <= len(segs):
+                    return None
+                for c, seg, dseg in zip(info.range_cols, segs,
+                                        parts[-len(segs):]):
+                    name, eq, val = seg.partition("=")
+                    dname, deq, dval = dseg.partition("=")
+                    if (name != c or dname != c or not eq or not deq
+                            or _unescape_path(dval) != val):
+                        return None
+                    vals.append(None if val == "__HIVE_DEFAULT_PARTITION__"
+                                else val)
+            k, consts = _dir_key(fd, levels), (wv, tuple(vals))
+            if key_dir.setdefault(k, fd) != fd:
+                return None  # two dirs share a probe key
+            if dir_map.setdefault(k, consts) != consts:
+                return None
         first = fs[0].path
         first_abs = first if os.path.isabs(first) else \
             os.path.join(store.table_path, first)
@@ -338,7 +355,7 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
         have = {f.name: f.dataType for f in ps.fields}
         for n, dt in declared.items():
             if n in info.range_cols or n not in present:
-                continue  # path-reconstructed / null-backfilled
+                continue  # probed per file / null-backfilled
             h = have.get(n)
             if h is None or h.simpleString() != dt.simpleString():
                 return None
@@ -349,80 +366,59 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
               for f in schema.fields if f.name not in info.range_cols]
     if any_tomb:
         fields.append(T.StructField(TOMBSTONE_COL, T.BooleanType(), True))
-    return T.StructType(fields), dir_wv, any_tomb, absent
+    return T.StructType(fields), dir_map, any_tomb, absent
 
 
-def _flat_reader(spark: SparkSession, info: TableInfo,
-                 read_schema: "T.StructType"):
-    """The single-relation reader for a flat scan: plain for hash-only
-    tables; ``recursiveFileLookup`` for range layouts so Spark skips
-    partition discovery entirely (which would reject hive dirs nested
-    under per-commit dirs as conflicting roots)."""
+def _sql_str(s: str) -> str:
+    # hex bytes: exact whatever the parser's escape settings
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
+def _flat_probe(info: TableInfo, dir_map: dict) -> "F.Column":
+    """A flat scan's per-file constants as ONE map probe per row: a
+    struct of the commit version plus each range value cast to its
+    declared type (the cast an explicit read schema would apply to the
+    dir value), fields ``col1..colN`` in that order. The literal map is
+    one SQL expression — a single py4j call however many dirs it holds.
+    A file whose dir is missing from the map fails the query instead of
+    reading as a NULL version."""
+    declared = {f.name: f.dataType for f in _schema(info).fields}
+    types = [declared[c].simpleString() for c in info.range_cols]
+    entries = []
+    for k, (wv, vals) in dir_map.items():
+        fields = [f"{int(wv)}L"] + [
+            f"CAST({'NULL' if v is None else _sql_str(v)} AS {t})"
+            for v, t in zip(vals, types)]
+        entries.append(f"{_sql_str(k)}, struct({', '.join(fields)})")
+    path = F.col("_metadata.file_path")
+    return F.coalesce(
+        F.element_at(F.expr(f"map({', '.join(entries)})"),
+                     _path_key_col(path, 1 + len(info.range_cols))),
+        F.raise_error(F.concat(
+            F.lit("flat scan: no commit dir mapped for "), path)))
+
+
+def _flat_relation(spark: SparkSession, store: ManifestStore,
+                   info: TableInfo, files: list[DataFileInfo],
+                   read_schema: "T.StructType", dir_map: dict,
+                   probe: bool = True) -> DataFrame:
+    """The single parquet relation of a flat scan, plus (``probe``) its
+    per-file constants as top-level ``_star_wv`` and range columns.
+    Range layouts read with ``recursiveFileLookup`` so Spark skips
+    partition discovery entirely."""
     reader = spark.read.schema(read_schema)
     if info.range_cols:
         reader = reader.option("recursiveFileLookup", "true")
-    return reader
-
-
-def _norm_path_col() -> "F.Column":
-    return F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
-
-
-def _flat_range_exprs(info: TableInfo,
-                      declared: dict) -> "list[F.Column]":
-    """Range columns rebuilt from the file path: one regexp per column
-    (gate guarantees URI/hive-invariant values), NULL for the hive
-    default-partition sentinel, cast to the declared type — the same
-    cast an explicit read schema would apply to the dir value."""
-    out = []
-    # extract against the RAW path — the '/col=value/' pattern is
-    # scheme-agnostic, so the per-row normalization regex is skipped
-    p = F.col("_metadata.file_path")
-    for c in info.range_cols:
-        # decode twice: URI layer (path column), then the writer's
-        # hive dir-name escaping — both plain %XX (see _decoded)
-        raw = _decoded(_decoded(
-            F.regexp_extract(p, "/" + c + "=([^/]+)/", 1)))
-        v = (F.when((raw == "") | (raw == "__HIVE_DEFAULT_PARTITION__"),
-                    F.lit(None))
-             .otherwise(raw).cast(declared[c]))
-        out.append(v.alias(c))
-    return out
-
-
-def _flat_version_col(dir_wv: dict[str, int],
-                      strip_levels: int = 1) -> "F.Column":
-    """Per-row commit version from the file's directory: drop the
-    basename (plus one level per range column — hive dirs sit between
-    the file and its commit dir), look the directory up in a tiny
-    literal map (one entry per commit group — bounded by the
-    compaction trigger, so the per-row lookup scans a handful of
-    entries).
-
-    Per-row cost matters here — this expression runs once per ROW of
-    every flat MoR scan. The segment strip is substring arithmetic
-    (``substring_index``), NOT a backtracking regex (a
-    ``(/[^/]+){k}$`` replace measured ~0.8 s per million rows), and
-    the scheme prefix is handled by keying the map under the plain,
-    ``file:`` and ``file://`` renderings of each dir instead of
-    normalizing the path per row. An exotic scheme falls back —
-    per-row lazily, via coalesce — to the normalized slow form rather
-    than silently missing the map."""
-    pairs = []
-    for d, wv in dir_wv.items():
-        for k in (d, "file:" + d, "file://" + d):
-            pairs += [F.lit(k), F.lit(int(wv))]
-    m = F.create_map(*pairs)
-    p = F.col("_metadata.file_path")
-    stripped = F.expr(
-        "substring(_metadata.file_path, 1, "
-        "length(_metadata.file_path) - "
-        f"length(substring_index(_metadata.file_path, '/', -{strip_levels}))"
-        " - 1)")
-    slow = _decoded(F.regexp_replace(
-        _norm_path_col(), "(/[^/]+){%d}$" % strip_levels, ""))
-    return F.coalesce(F.element_at(m, _decoded(stripped)),
-                      F.element_at(m, slow))
+    u = reader.parquet(*[f.path if os.path.isabs(f.path)
+                         else os.path.join(store.table_path, f.path)
+                         for f in files])
+    if not probe:
+        return u
+    # one field access per constant; whole-stage codegen evaluates the
+    # shared probe once per row (subexpression elimination)
+    pf = _flat_probe(info, dir_map)
+    return u.select("*", *[pf.getField(f"col{i}").alias(n) for i, n
+                           in enumerate([_WV, *info.range_cols], 1)])
 
 
 def _nested_evolves(have: "T.DataType", want: "T.DataType") -> bool:
@@ -568,7 +564,7 @@ def _apply_dvs(spark: SparkSession, store: ManifestStore,
     paths = [p if os.path.isabs(p) else os.path.join(store.table_path, p)
              for p in (d.path for d in dv_infos)]
     dv = spark.read.parquet(*paths).select(DV_FID, DV_POS)
-    thr = _broadcast_threshold(spark)
+    thr = _conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold")
     if 0 < sum(d.size for d in dv_infos) <= max(thr, 64 << 20):
         dv = F.broadcast(dv)
     out = out.join(dv, [DV_FID, DV_POS], "left_anti")
@@ -590,23 +586,14 @@ def _plain_scan(
         # _flat_read_plan) — no version attribution needed here, each
         # partition holds a single final version, so the only fast-path
         # extra is refusing tombstone files (single-version tombstone
-        # groups must keep the union path's column surface)
-        # no version column here — hash-only plain scans carry zero
-        # per-row path work, so only range reconstruction gates on size
+        # groups must keep the union path's column surface). Hash-only
+        # plain scans carry zero per-row work, so only the range-column
+        # probe gates on size.
         flat = _flat_read_plan(store, info, groups, per_row_cost=False)
         if flat is not None and not flat[2]:
-            read_schema, _dir_wv, _, _absent = flat
-            paths = [f.path if os.path.isabs(f.path)
-                     else os.path.join(store.table_path, f.path)
-                     for f in files]
-            schema = _schema(info)
-            u = _flat_reader(spark, info, read_schema).parquet(*paths)
-            declared = {f.name: f.dataType for f in schema.fields}
-            rng_exprs = dict(zip(info.range_cols,
-                                 _flat_range_exprs(info, declared)))
-            cols = [rng_exprs.get(f.name, F.col(f.name))
-                    for f in schema.fields]
-            return u.select(*cols)
+            u = _flat_relation(spark, store, info, files, flat[0], flat[1],
+                               probe=bool(info.range_cols))
+            return u.select(*[F.col(f.name) for f in _schema(info).fields])
     dfs = [
         _read_group(spark, store, info, cdir, fs, with_rowid=need_id)
         for (_wv, cdir), fs in groups.items()
@@ -619,6 +606,17 @@ def _plain_scan(
     return out
 
 
+def _one_task_merge(spark: SparkSession, files: list[DataFileInfo]) -> bool:
+    """True when a MoR merge can run as ONE task with no shuffle — the
+    reference's per-bucket merge: every file in the same bucket (no key
+    crosses buckets) and, together, no larger than one read split
+    (``spark.sql.files.maxPartitionBytes``)."""
+    buckets = {f.bucket_id for f in files}
+    return (len(buckets) == 1 and min(buckets) >= 0
+            and sum(f.size for f in files)
+            <= _conf_bytes(spark, "spark.sql.files.maxPartitionBytes"))
+
+
 def _merge_scan(
     spark: SparkSession,
     store: ManifestStore,
@@ -629,6 +627,40 @@ def _merge_scan(
     schema = _schema(info)
     keys = info.range_cols + info.hash_cols
     data_cols = [f for f in schema.fields if f.name not in keys]
+    # a single-bucket merge that fits one split reads as one partition:
+    # the keyed aggregate then needs no Exchange (one job, one task)
+    one_task = _one_task_merge(spark, files)
+
+    def _collapse(u: DataFrame, ordc, tomb: bool) -> DataFrame:
+        """Collapse ``u`` per key: each data column from its highest
+        ``ordc(column)`` version (a NULL ordering skips that row), or
+        its merge operator over every version; liveness last-wins on
+        the commit version."""
+        aggs = []
+        for f in data_cols:
+            o = ordc(f.name)
+            op = merge_operators.get(f.name)
+            if op is None:
+                aggs.append(F.max_by(F.col(f.name), o).alias(f.name))
+            else:
+                versions = F.sort_array(F.collect_list(F.when(
+                    o.isNotNull(),
+                    F.struct(o.alias("v"), F.col(f.name).alias("x")))))
+                aggs.append(op.column(versions, f.dataType)
+                            .cast(f.dataType).alias(f.name))
+        if tomb:
+            aggs.append(F.max_by(F.coalesce(F.col(TOMBSTONE_COL),
+                                            F.lit(False)), F.col(_WV))
+                        .alias(TOMBSTONE_COL))
+        if one_task:
+            u = u.coalesce(1)
+        if aggs:
+            merged = u.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
+        else:
+            merged = u.select(*keys).distinct()  # key-only table
+        if tomb:
+            merged = merged.filter(~F.col(TOMBSTONE_COL))
+        return merged.select(*[F.col(f.name) for f in schema.fields])
 
     groups = _group_files(files)
     flat = _flat_read_plan(store, info, groups)
@@ -637,50 +669,21 @@ def _merge_scan(
         # that group's version (uniform exist_cols — checked by the
         # gate), so the per-column ordering literal degenerates to the
         # file's commit version and the whole union collapses into ONE
-        # parquet scan + version column + the same keyed aggregation.
-        read_schema, dir_wv, f_tomb, absent = flat
-        paths = [f.path if os.path.isabs(f.path)
-                 else os.path.join(store.table_path, f.path)
-                 for f in files]
-        declared = {f.name: f.dataType for f in schema.fields}
-        extra = _flat_range_exprs(info, declared)
-        extra.append(_flat_version_col(
-            dir_wv, strip_levels=1 + len(info.range_cols))
-            .cast("long").alias(_WV))
-        u = (_flat_reader(spark, info, read_schema).parquet(*paths)
-             .select("*", *extra))
+        # parquet scan + per-file constants + the same keyed aggregation.
+        read_schema, dir_map, f_tomb, absent = flat
+        u = _flat_relation(spark, store, info, files, read_schema, dir_map)
 
         def _ord(col_name):
             # per-column ordering: NULL on commits where the column is
-            # absent (max_by / the when-collect skip null orderings) —
-            # the single-relation equivalent of the union path's
-            # per-branch null-ordering literal
+            # absent — the single-relation equivalent of the union
+            # path's per-branch null-ordering literal
             miss = absent.get(col_name)
             if not miss:
                 return F.col(_WV)
             return F.when(~F.col(_WV).isin(*[int(v) for v in miss]),
                           F.col(_WV))
 
-        aggs = []
-        for f in data_cols:
-            ordc = _ord(f.name)
-            op = merge_operators.get(f.name)
-            if op is None:
-                aggs.append(F.max_by(F.col(f.name), ordc).alias(f.name))
-            else:
-                versions = F.sort_array(F.collect_list(
-                    F.when(ordc.isNotNull(), F.struct(
-                        ordc.alias("v"), F.col(f.name).alias("x")))))
-                aggs.append(op.column(versions, f.dataType)
-                            .cast(f.dataType).alias(f.name))
-        if f_tomb:
-            aggs.append(F.max_by(F.coalesce(F.col(TOMBSTONE_COL),
-                                            F.lit(False)), F.col(_WV))
-                        .alias(TOMBSTONE_COL))
-        merged = u.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-        if f_tomb:
-            merged = merged.filter(~F.col(TOMBSTONE_COL))
-        return merged.select(*[F.col(f.name) for f in schema.fields])
+        return _collapse(u, _ord, f_tomb)
     branches = []
     amap = alias_map(info)
     any_tomb = any(TOMBSTONE_COL in fs[0].exist_cols for fs in groups.values())
@@ -716,32 +719,7 @@ def _merge_scan(
     u = branches[0]
     for b in branches[1:]:
         u = u.unionByName(b)
-
-    aggs = []
-    for f in data_cols:
-        ordc = F.col(_ORD + f.name)
-        op = merge_operators.get(f.name)
-        if op is None:
-            aggs.append(F.max_by(F.col(f.name), ordc).alias(f.name))
-        else:
-            versions = F.sort_array(
-                F.collect_list(
-                    F.when(
-                        ordc.isNotNull(),
-                        F.struct(ordc.alias("v"), F.col(f.name).alias("x")),
-                    )
-                )
-            )
-            aggs.append(op.column(versions, f.dataType).cast(f.dataType).alias(f.name))
-
-    if any_tomb:
-        # liveness collapses like any last-wins column, keyed on the
-        # always-present commit version
-        aggs.append(F.max_by(F.col(TOMBSTONE_COL), F.col(_WV)).alias(TOMBSTONE_COL))
-    merged = u.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-    if any_tomb:
-        merged = merged.filter(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
-    return merged.select(*[F.col(f.name) for f in schema.fields])
+    return _collapse(u, lambda c: F.col(_ORD + c), any_tomb)
 
 
 def _eval_part_rhs_py(rhs: str, dtype):
@@ -1876,7 +1854,7 @@ def scan(
         # autoBroadcastJoinThreshold, hint broadcast. Spark drops the
         # hint with a warning where it can't apply (e.g. the preserved
         # side of an outer join) — never a correctness surface.
-        thr = _broadcast_threshold(spark)
+        thr = _conf_bytes(spark, "spark.sql.autoBroadcastJoinThreshold")
         if 0 < sum(f.size for f in merge_files + plain_files) <= thr:
             out = F.broadcast(out)
     return out
@@ -1888,10 +1866,10 @@ _SIZE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
                "t": 1 << 40, "tb": 1 << 40}
 
 
-def _broadcast_threshold(spark: SparkSession) -> int:
-    """spark.sql.autoBroadcastJoinThreshold in bytes (-1 = disabled)."""
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size SQL conf in bytes (-1 = disabled or unparsable)."""
     try:
-        raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+        raw = str(spark.conf.get(key))
         m = _SIZE_RE.match(raw.strip().lower())
         if not m:
             return -1

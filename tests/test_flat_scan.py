@@ -127,6 +127,24 @@ def test_flat_gate_refuses_rename(spark, tmp_table_dir):
     assert out[7].label == "name_7"
 
 
+def test_flat_gate_refuses_shared_probe_key(churned_table, tmp_path):
+    """Two different dirs whose last segments coincide would probe the
+    same key: the gate must refuse rather than attribute one dir's
+    version to the other's files."""
+    import dataclasses
+    import shutil
+    from starlake_spark.operators import reader as R
+    store = churned_table.store
+    groups = R._group_files(store.snapshot().all_files())
+    (_wv, cdir), fs = next(iter(groups.items()))
+    twin_path = str(tmp_path / fs[0].path)  # same commit dir name
+    os.makedirs(os.path.dirname(twin_path))
+    shutil.copy(os.path.join(store.table_path, fs[0].path), twin_path)
+    groups[(10_000, os.path.dirname(twin_path))] = [
+        dataclasses.replace(fs[0], write_version=10_000, path=twin_path)]
+    assert R._flat_read_plan(store, store.table_info(), groups) is None
+
+
 def test_flat_gate_refuses_merge_on_in_batch_ties(spark, churned_table):
     """The flat path and union path must collapse in-batch duplicate
     keys identically (both order by commit version only — ties within
@@ -185,7 +203,10 @@ def test_range_merge_scan_flat_equals_union(spark, churned_range_table,
 
 def test_range_flat_version_pinned_reads(spark, churned_range_table,
                                          monkeypatch):
-    t = churned_range_table
+    _flat_equals_union_every_version(churned_range_table, monkeypatch)
+
+
+def _flat_equals_union_every_version(t, monkeypatch):
     for v in range(1, t.store.latest_version() + 1):
         monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
         ref = _rows(t.to_df(version=v))
@@ -196,13 +217,14 @@ def test_range_flat_version_pinned_reads(spark, churned_range_table,
 def test_range_flat_uri_escaped_values(spark, tmp_table_dir,
                                        monkeypatch):
     """Partition values the file-path URI encoding alters (space, %,
-    +) must decode back byte-exactly through the flat reconstruction —
-    the TPC-H priority strings ('4-NOT SPECIFIED') are the everyday
-    case."""
-    df = spark.range(0, 60).select(
+    +, non-ASCII) must come back byte-exactly through the flat scan's
+    per-file constants — the TPC-H priority strings ('4-NOT
+    SPECIFIED') are the everyday case."""
+    df = spark.range(0, 80).select(
         F.col("id").alias("k"),
-        F.when(F.col("id") % 3 == 0, F.lit("plain"))
-         .when(F.col("id") % 3 == 1, F.lit("has space"))
+        F.when(F.col("id") % 4 == 0, F.lit("plain"))
+         .when(F.col("id") % 4 == 1, F.lit("has space"))
+         .when(F.col("id") % 4 == 2, F.lit("ünï çødé"))
          .otherwise(F.lit("odd%2B+val")).alias("region"),
         (F.col("id") * 1.5).alias("bal"))
     t = create_table(spark, df, tmp_table_dir,
@@ -214,10 +236,38 @@ def test_range_flat_uri_escaped_values(spark, tmp_table_dir,
     groups = rd._group_files(t.store.snapshot().all_files())
     assert rd._flat_read_plan(t.store, t.store.table_info(),
                               groups) is not None
-    monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
-    ref = _rows(t.to_df())
-    monkeypatch.delenv("STARLAKE_FLAT_SCAN")
-    assert _rows(t.to_df()) == ref
+    _flat_equals_union_every_version(t, monkeypatch)
+    assert {r.region for r in t.to_df().collect()} == {
+        "plain", "has space", "ünï çødé", "odd%2B+val"}
+
+
+def test_range_flat_null_partition_value(spark, tmp_path, monkeypatch):
+    """The hive default partition of an adopted layout reads as NULL
+    through the flat plain scan, as Spark's partition discovery reads
+    it on the union path."""
+    src = str(tmp_path / "adopt")
+    spark.range(0, 30).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 3 == 0, F.lit(None))
+         .otherwise(F.concat(F.lit("r"), F.col("id") % 2)).alias("region"),
+        (F.col("id") * 1.5).alias("bal"),
+    ).write.partitionBy("region").parquet(src)
+    from starlake_spark.table import convert_to_star
+    t = convert_to_star(spark, src, range_partitions=["region"],
+                        configuration=NO_COMPACT)
+    t.write(spark.range(100, 110).select(
+        F.col("id").alias("k"), F.lit("ünï").alias("region"),
+        (F.col("id") * 1.5).alias("bal")))
+    from starlake_spark.operators import reader as rd
+    groups = rd._group_files(t.store.snapshot().all_files())
+    flat = rd._flat_read_plan(t.store, t.store.table_info(), groups,
+                              per_row_cost=False)
+    assert flat is not None
+    assert (None,) in {vals for _wv, vals in flat[1].values()}
+    _flat_equals_union_every_version(t, monkeypatch)
+    rows = t.to_df().collect()
+    assert sum(r.region is None for r in rows) == 10
+    assert sum(r.region == "ünï" for r in rows) == 10
 
 
 def test_range_flat_gate_refuses_comma_values(spark, tmp_table_dir,
@@ -243,3 +293,130 @@ def test_range_flat_gate_refuses_comma_values(spark, tmp_table_dir,
     ref = _rows(t.to_df())
     monkeypatch.delenv("STARLAKE_FLAT_SCAN")
     assert _rows(t.to_df()) == ref
+
+
+@pytest.mark.parametrize("tombstones", [False, True])
+def test_key_only_hash_table_mor_scan(spark, tmp_table_dir, monkeypatch,
+                                      tombstones):
+    """A hash table whose columns are all keys merges to its distinct
+    live keys on both arms, though it has no column to aggregate."""
+    t = create_table(spark, spark.range(0, 20).select(
+        F.col("id").alias("k")), tmp_table_dir,
+        hash_partitions=["k"], hash_bucket_num=2, configuration=NO_COMPACT)
+    t.upsert(spark.range(15, 25).select(F.col("id").alias("k")))
+    want = set(range(25))
+    if tombstones:
+        t.delete("k % 4 = 0", use_delta=True)
+        want = {k for k in want if k % 4}
+    for flat in ("off", None):
+        if flat:
+            monkeypatch.setenv("STARLAKE_FLAT_SCAN", flat)
+        else:
+            monkeypatch.delenv("STARLAKE_FLAT_SCAN", raising=False)
+        got = [r.k for r in t.to_df().collect()]
+        assert sorted(got) == sorted(want)
+        assert [r.k for r in t.to_df(where="k = 17").collect()] == [17]
+
+
+def test_flat_probe_fails_loudly_on_unmapped_dir(spark, churned_range_table,
+                                                 monkeypatch):
+    """A file whose dir is missing from the per-file constants map fails
+    the scan instead of reading as a NULL version."""
+    from starlake_spark.operators import reader as rd
+    orig = rd._flat_read_plan
+
+    def drop_one(*a, **kw):
+        out = orig(*a, **kw)
+        if out is not None:
+            dir_map = dict(out[1])
+            dir_map.pop(next(iter(dir_map)))
+            out = (out[0], dir_map, *out[2:])
+        return out
+
+    monkeypatch.setattr(rd, "_flat_read_plan", drop_one)
+    with pytest.raises(Exception, match="no commit dir mapped"):
+        churned_range_table.to_df().collect()
+
+
+@pytest.mark.parametrize("region", ["r=1", "r=has space é", "r=odd%252B+v"])
+def test_probe_key_is_scheme_independent(spark, region):
+    """The probe key is a path suffix: an s3a:// file and the local
+    rendering of the same table layout derive the key the map holds."""
+    from starlake_spark.operators import reader as rd
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    cid = "0a83e6080b6b"
+    want = rd._dir_key(f"/tmp/t/data/{cid}/{region}", 2)
+    rendered = [jpath(f"{root}/t/data/{cid}/{region}/part-0.parquet")
+                .toUri().toString()
+                for root in ("s3a://b", "/tmp", "file:///tmp")]
+    got = spark.createDataFrame([(p,) for p in rendered], "p string") \
+        .select(rd._path_key_col(F.col("p"), 2).alias("key")).collect()
+    assert [r.key for r in got] == [want] * 3
+
+
+def _plan_and_jobs(spark, df):
+    """(executed plan text, jobs, tasks) of collecting ``df``."""
+    import uuid
+    sc = spark.sparkContext
+    gid = "flat-" + uuid.uuid4().hex
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    sc.setJobGroup(gid, "plan hygiene probe")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(gid)
+    tasks = sum(st.getStageInfo(s).numTasks for j in jobs
+                for s in st.getJobInfo(j).stageIds)
+    return plan, len(jobs), tasks, rows
+
+
+def _bucket_of(spark, keys, n=2):
+    return {r.id: r.b for r in spark.createDataFrame(
+        [(k,) for k in keys], "id bigint").select(
+        "id", F.expr(f"pmod(hash(id), {n})").alias("b")).collect()}
+
+
+def test_single_bucket_lookup_has_no_exchange(spark, churned_range_table,
+                                              monkeypatch):
+    """A MoR point lookup touches one bucket's files: the reference's
+    per-bucket merge runs as one task, with no shuffle and one job.
+    Multi-bucket lookups and full scans keep their Exchange."""
+    t = churned_range_table
+    plan, jobs, tasks, rows = _plan_and_jobs(
+        spark, t.to_df(where="region = 'r1' AND k = 7"))
+    assert "Exchange" not in plan, plan
+    assert (jobs, tasks) == (1, 1)
+    monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
+    assert _rows(t.to_df(where="region = 'r1' AND k = 7")) == \
+        sorted(tuple(r) for r in rows)
+    monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+
+    b = _bucket_of(spark, range(1, 40, 3))
+    pair = [next(k for k, v in b.items() if v == 0),
+            next(k for k, v in b.items() if v == 1)]
+    where = f"region = 'r1' AND k IN ({pair[0]}, {pair[1]})"
+    plan, _, _, rows = _plan_and_jobs(spark, t.to_df(where=where))
+    assert "Exchange" in plan
+    assert sorted(r.k for r in rows) == sorted(pair)
+    plan, _, _, _ = _plan_and_jobs(spark, t.to_df())
+    assert "Exchange" in plan
+
+
+def test_single_bucket_merge_above_split_size_keeps_exchange(
+        spark, churned_range_table):
+    """The one-task merge is sized on spark.sql.files.maxPartitionBytes:
+    a single-bucket merge larger than one split keeps its shuffle."""
+    t = churned_range_table
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    smallest = min(f.size for f in t.store.snapshot().all_files())
+    spark.conf.set(key, str(smallest - 1))
+    try:
+        plan, _, _, rows = _plan_and_jobs(
+            spark, t.to_df(where="region = 'r1' AND k = 7"))
+    finally:
+        spark.conf.set(key, old)
+    assert "Exchange" in plan
+    assert [r.k for r in rows] == [7]
