@@ -845,15 +845,16 @@ def _index_sync(spark, index, source, prefix: str,
     tombstone every change key out of its OLD cell (preimage vectors
     re-assigned against the immutable centroids), apply
     ``build_upsert_frame(new_rows)`` for inserts/postimages, then
-    advance the watermark. Counts come from the persisted window's
-    filters (single evaluation — the assignment/encode plans run only
-    inside delete_keys/upsert)."""
+    advance the watermark. The window is the session's shared,
+    materialized one (``shared_range_changes``); its counts come from
+    the driver rows when held, and the assignment/encode plans run
+    only inside delete_keys/upsert."""
     import json as _json
 
     import numpy as _np
 
     from starlake_spark.sources.datasource import (CHANGE_TYPE_COL,
-                                                   range_changes)
+                                                   shared_range_changes)
     from starlake_spark.table import StarTable
 
     cfg = index.info.configuration or {}
@@ -889,39 +890,33 @@ def _index_sync(spark, index, source, prefix: str,
     v0 = int(cfg.get(f"{prefix}.synced_version", 0))
     if v0 >= v1:
         return index, {"mode": "noop", "from_version": v0, "to_version": v0}
-    ch = range_changes(spark, src.store.table_path, v0, v1).persist()
-    try:
-        # one aggregate pass fills the cache AND yields both counts —
-        # the former per-filter .count() pair cost an extra job over
-        # the cached window (optimization round 10)
-        cnt = {r[0]: r[1] for r in
-               ch.groupBy(CHANGE_TYPE_COL).count().collect()}
-        old = ch.filter(F.col(CHANGE_TYPE_COL)
-                        .isin("update_preimage", "delete"))
-        n_del = cnt.get("update_preimage", 0) + cnt.get("delete", 0)
-        dead = None
-        if n_del:
-            dead = (old.select(F.col(id_col),
-                               _as_double(F.col(vec_col)).alias("_v"))
-                    .withColumn("centroid_id",
-                                nearest_centroid_col(F.col("_v"), ids, M,
-                                                     spark))
-                    .select("centroid_id", id_col))
-        new = ch.filter(F.col(CHANGE_TYPE_COL)
-                        .isin("insert", "update_postimage"))
-        n_up = cnt.get("insert", 0) + cnt.get("update_postimage", 0)
-        if n_del and n_up:
-            # one commit for the whole sync transition (tombstones out
-            # of old cells + postimages into new cells) — one write
-            # job + one manifest version instead of two
-            index.upsert_with_tombstones(
-                build_upsert_frame(new, ids, M, id_col, vec_col), dead)
-        elif n_del:
-            index.delete_keys(dead)
-        elif n_up:
-            index.upsert(build_upsert_frame(new, ids, M, id_col, vec_col))
-    finally:
-        ch.unpersist()
+    win = shared_range_changes(spark, src.store.table_path, v0, v1)
+    ch = win.frame
+    cnt = win.counts()
+    old = ch.filter(F.col(CHANGE_TYPE_COL)
+                    .isin("update_preimage", "delete"))
+    n_del = cnt.get("update_preimage", 0) + cnt.get("delete", 0)
+    dead = None
+    if n_del:
+        dead = (old.select(F.col(id_col),
+                           _as_double(F.col(vec_col)).alias("_v"))
+                .withColumn("centroid_id",
+                            nearest_centroid_col(F.col("_v"), ids, M,
+                                                 spark))
+                .select("centroid_id", id_col))
+    new = ch.filter(F.col(CHANGE_TYPE_COL)
+                    .isin("insert", "update_postimage"))
+    n_up = cnt.get("insert", 0) + cnt.get("update_postimage", 0)
+    if n_del and n_up:
+        # one commit for the whole sync transition (tombstones out
+        # of old cells + postimages into new cells) — one write
+        # job + one manifest version instead of two
+        index.upsert_with_tombstones(
+            build_upsert_frame(new, ids, M, id_col, vec_col), dead)
+    elif n_del:
+        index.delete_keys(dead)
+    elif n_up:
+        index.upsert(build_upsert_frame(new, ids, M, id_col, vec_col))
     index.set_properties({f"{prefix}.synced_version": str(v1)})
     return index, {"mode": "incremental", "from_version": v0,
                    "to_version": v1, "removed": n_del, "upserted": n_up}

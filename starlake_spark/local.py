@@ -26,8 +26,18 @@ back to the plain ``createDataFrame`` path.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def local_row_cap() -> int:
+    """Rows a derived-data intermediate (MV / rollup refresh frames,
+    shared change windows) may hold on the driver before it stays a
+    cluster-side checkpoint: ``STARLAKE_MV_LOCAL_ROW_CAP``, default
+    131072; ``<= 0`` forces the checkpoint arm."""
+    return int(os.environ.get("STARLAKE_MV_LOCAL_ROW_CAP", "131072"))
 
 
 def mat_local(spark: SparkSession, df: DataFrame,

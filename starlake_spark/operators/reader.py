@@ -1681,6 +1681,7 @@ def scan(
     where: str | None = None,
     schema_as_of: bool = True,
     with_rowid: bool = False,
+    broadcast_hint: bool = True,
 ) -> DataFrame:
     """Build the DataFrame view of a table snapshot.
 
@@ -1698,6 +1699,11 @@ def scan(
     (_star_fid, _star_pos) to the output — non-hash tables only (a
     MoR-merged row has no single physical position). The DV delete
     path records positions through this flag.
+
+    ``broadcast_hint=False``: leave out the manifest-size broadcast
+    hint (below). Callers whose scan only ever feeds the probe side of
+    a left-semi join pass it: Spark cannot build that side and would
+    drop the hint with a warning on every query.
     """
     # refresh=True: a scan must serve the CURRENT declared schema even
     # on a long-lived handle — another process's ALTER / auto-merged
@@ -1844,7 +1850,7 @@ def scan(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if merge_files:
+    if merge_files and broadcast_hint:
         # Manifest-size broadcast hint: Catalyst estimates a plain
         # parquet relation from its file sizes, but the MoR collapse
         # (union + groupBy) defeats that — a 2 MB dimension table with

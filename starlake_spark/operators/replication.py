@@ -80,7 +80,7 @@ def sync_table(spark: SparkSession, source, target_path: str,
     import os
 
     from starlake_spark.sources.datasource import (
-        CHANGE_TYPE_COL, VERSION_COL, range_changes)
+        CHANGE_TYPE_COL, VERSION_COL, shared_range_changes)
     from starlake_spark.table import StarTable, create_table
 
     src = source if isinstance(source, StarTable) \
@@ -144,26 +144,26 @@ def sync_table(spark: SparkSession, source, target_path: str,
                      to_version=src_version)
         return t, stats
 
-    ch = range_changes(spark, src_path, v0, src_version).persist()
-    try:
-        data_cols = [c for c in ch.columns
-                     if c not in (VERSION_COL, CHANGE_TYPE_COL)]
-        ups = (ch.filter(F.col(CHANGE_TYPE_COL)
-                         .isin("insert", "update_postimage"))
-                 .select(*data_cols))
-        dels = (ch.filter(F.col(CHANGE_TYPE_COL) == "delete")
-                  .select(*(sinfo.range_cols + sinfo.hash_cols)))
-        n_up, n_del = ups.count(), dels.count()
-        with _applying():
-            if n_up and n_del:
-                # one commit for the window's whole transition
-                t.upsert_with_tombstones(ups, dels)
-            elif n_up:
-                t.upsert(ups)
-            elif n_del:
-                t.delete_keys(dels)
-    finally:
-        ch.unpersist()
+    win = shared_range_changes(spark, src_path, v0, src_version)
+    ch = win.frame
+    data_cols = [c for c in ch.columns
+                 if c not in (VERSION_COL, CHANGE_TYPE_COL)]
+    ups = (ch.filter(F.col(CHANGE_TYPE_COL)
+                     .isin("insert", "update_postimage"))
+             .select(*data_cols))
+    dels = (ch.filter(F.col(CHANGE_TYPE_COL) == "delete")
+              .select(*(sinfo.range_cols + sinfo.hash_cols)))
+    cnt = win.counts()
+    n_up = cnt.get("insert", 0) + cnt.get("update_postimage", 0)
+    n_del = cnt.get("delete", 0)
+    with _applying():
+        if n_up and n_del:
+            # one commit for the window's whole transition
+            t.upsert_with_tombstones(ups, dels)
+        elif n_up:
+            t.upsert(ups)
+        elif n_del:
+            t.delete_keys(dels)
     t.set_properties({VERSION_PROP: str(src_version)})
     return t, {"mode": "incremental", "from_version": v0,
                "to_version": src_version, "upserted": n_up,

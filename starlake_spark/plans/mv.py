@@ -39,13 +39,20 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
 
 from starlake_spark import catalog
 from starlake_spark.local import local_df
-from starlake_spark.meta import ManifestStore
+from starlake_spark.meta import ManifestStore, MetaError
+from starlake_spark.operators import reader
 from starlake_spark.table import StarTable, create_table
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+
+    from starlake_spark.sources.datasource import ChangeWindow
 
 
 class UnsupportedPlan(Exception):
@@ -1214,6 +1221,8 @@ def _prune_touched(old: DataFrame, dkeys: DataFrame, keys: list[str],
                    n_touched: int) -> DataFrame:
     """Semi-prune the backing table to the window's touched groups —
     scan-filter shape, never an O(|MV|) shuffle of the backing table.
+    ``old`` is the semi join's probe side, which Spark never builds: a
+    scan without the broadcast hint (``broadcast_hint=False``).
     Broadcast budget: a window touching more distinct groups than
     ``STARLAKE_MV_BROADCAST_KEY_LIMIT`` (default 1M keys ≈ tens of MB)
     must not fail the refresh on the broadcast size cap — it falls back
@@ -1230,21 +1239,28 @@ def _prune_touched(old: DataFrame, dkeys: DataFrame, keys: list[str],
 
 
 def _change_window(spark, src: ManifestStore, last: int,
-                   cur: int) -> "DataFrame | str | None":
+                   cur: int) -> "ChangeWindow | str | None":
     """The signed change frame for source versions (last, cur]:
-    a DataFrame carrying ``_change_type``, the string ``"noop"`` when
-    the window provably changed nothing, or None (→ full rebuild:
-    cursor manifest expired, history rewritten, or a deletion-vector
-    change an append-only diff cannot express)."""
-    from starlake_spark.operators import reader
-    from starlake_spark.sources.datasource import range_changes
+    a ChangeWindow whose frame carries ``_change_type``, the string
+    ``"noop"`` when the window provably changed nothing, or None (→
+    full rebuild: cursor manifest expired, history rewritten, or a
+    deletion-vector change an append-only diff cannot express).
+
+    Hash sources read the session's shared window
+    (``shared_range_changes``): the GROUP BY MV, the join MV, the
+    distinct-agg aux tables and the rollups over one source all consume
+    the same (last, cur] diff, materialized once. Append-only sources
+    return a lazy plain scan of the window's new files, which is as
+    cheap to re-read as a checkpoint of it."""
+    from starlake_spark.sources.datasource import (ChangeWindow,
+                                                   shared_range_changes)
 
     info = src.table_info()
     try:
         last_snap = src.snapshot(last)
-        last_files = last_snap.all_files()
-    except Exception:
+    except MetaError:
         return None  # cursor manifest expired → full rebuild
+    last_files = last_snap.all_files()
     if info.hash_cols:
         # the window diff reads preimages; a vacuumed one → full
         # rebuild (same guard as refresh_rollup). Probes are BOUNDED to
@@ -1264,14 +1280,13 @@ def _change_window(spark, src: ManifestStore, last: int,
         lister = get_lister()
         try:
             cur_paths = {f.path for f in src.snapshot(cur).all_files()}
-        except Exception:
+        except MetaError:
             return None
         expired = [f for f in last_files if f.path not in cur_paths]
         if not all(lister.exists(os.path.join(src.table_path, f.path))
                    for f in expired):
             return None
-        return range_changes(spark, src.table_path, start_version=last,
-                             end_version=cur)
+        return shared_range_changes(spark, src.table_path, last, cur)
     prev_paths = {f.path for f in last_files}
     cur_snap = src.snapshot(cur)
     cur_files = cur_snap.all_files()
@@ -1292,8 +1307,8 @@ def _change_window(spark, src: ManifestStore, last: int,
     new_files = [f for f in cur_files if f.write_version > last]
     if not new_files:
         return "noop"
-    return (reader._plain_scan(spark, src, info, new_files)
-            .withColumn("_change_type", F.lit("insert")))
+    return ChangeWindow(reader._plain_scan(spark, src, info, new_files)
+                        .withColumn("_change_type", F.lit("insert")))
 
 
 def _rescan_inlist(spec, tkeys_rows, cols_dt) -> list[str]:
@@ -1356,10 +1371,9 @@ def _mat_touched(spark, df: DataFrame) -> "tuple[DataFrame, list | None]":
     ``STARLAKE_MV_LOCAL_ROW_CAP`` groups keep the cluster-side shape —
     the cap bounds driver memory, NOT correctness: both arms compute
     the identical frame)."""
-    from starlake_spark.local import mat_local
+    from starlake_spark.local import local_row_cap, mat_local
 
-    cap = int(os.environ.get("STARLAKE_MV_LOCAL_ROW_CAP", "131072"))
-    return mat_local(spark, df, cap)
+    return mat_local(spark, df, local_row_cap())
 
 
 def _pykey(vals) -> tuple:
@@ -1463,7 +1477,7 @@ def _merge_aux(spark, aux_t: StarTable, delta2: DataFrame, akeys,
     to one row each."""
     from starlake_spark.operators import dml
 
-    old = aux_t.to_df()
+    old = reader.scan(spark, aux_t.store, broadcast_hint=False)
     dd = delta2
     for c in delta2.columns:
         dd = dd.withColumnRenamed(c, c + "__d")
@@ -1528,7 +1542,7 @@ def _sync_distinct_aux(session, spec, src: ManifestStore, t: StarTable,
                 if isinstance(ch2, str):  # noop tail
                     continue
                 drop_v = f"_mv_aux_{uuid.uuid4().hex[:10]}"
-                ch2.createOrReplaceTempView(drop_v)
+                ch2.frame.createOrReplaceTempView(drop_v)
                 ch_v = drop_v
             delta2, d2rows = _mat_touched(spark, spark.sql(
                 _aux_delta_sql(spec, a, ch_v, signed=True)))
@@ -1571,7 +1585,8 @@ def _apply_recounts(spark, spec, full: DataFrame, keys,
     n_t = None
     tk = None
     for apath, aggs in by_path.items():
-        adf = _live_aux(StarTable.for_path(spark, apath).to_df())
+        adf = _live_aux(reader.scan(spark, ManifestStore(apath),
+                                    broadcast_hint=False))
         outs = [a["out"] for a in aggs]
         if not keys:
             rec = adf.agg(*[_rec_expr(a) for a in aggs])
@@ -1634,7 +1649,9 @@ def _apply_delta(spark, t: StarTable, spec, delta: DataFrame,
 
     keys = [g["out"] for g in spec["groups"]]
     hidden = _mv_hidden_cols(spec)
-    old = t.to_df()
+    # the hint only applies to the global aggregate's cross join; a
+    # keyed view's scan is the probe side of _prune_touched's semi join
+    old = reader.scan(spark, t.store, broadcast_hint=not keys)
     old_dt = {f.name: f.dataType for f in old.schema.fields}
     dd = delta.select(*[F.col(c).alias(c + "__d") for c in delta.columns])
     if keys:
@@ -1871,7 +1888,7 @@ def _incremental_refresh(session, ent,
     if isinstance(ch, str):  # "noop"
         return ("noop", {spec["source"]: cur})
     cv = f"_mv_ch_{uuid.uuid4().hex[:10]}"
-    ch.createOrReplaceTempView(cv)
+    ch.frame.createOrReplaceTempView(cv)
     try:
         if _distinct_aggs(spec):
             aux_paths = ent.get("aux_paths") or {}
@@ -2033,7 +2050,8 @@ def _left_dim_window_frame(spark, spec, frames) -> DataFrame:
     return matched.unionByName(nulls.select(*matched.columns))
 
 
-def _join_prune_predicates(ch, spec, cname) -> dict:
+def _join_prune_predicates(ch: DataFrame, spec, cname,
+                           rows: "pa.Table | None" = None) -> dict:
     """Δ-KEY FILE PRUNING for the pinned sides of a join-MV window:
     for every table with a DIRECT equi-edge to the changed table,
     collect the window's distinct join-key values (bounded by
@@ -2048,8 +2066,11 @@ def _join_prune_predicates(ch, spec, cname) -> dict:
     Only DIRECTLY-connected tables are pruned (a transitively-reached
     table joins through another pinned table's rows, not Δ's keys);
     over-budget windows and non-int/str key types skip pruning — a
-    pure optimization, never a correctness surface. ``ch`` must be
-    materialized (localCheckpoint) — the collects re-read it."""
+    pure optimization, never a correctness surface. ``rows``, the
+    window's rows when held on the driver, answer with no Spark job;
+    otherwise one capped collect per key column re-reads ``ch`` (a
+    checkpoint, or an append-only window's plain scan of its new
+    files)."""
     limit = int(os.environ.get("STARLAKE_MV_JOIN_PRUNE_KEY_LIMIT", "1024"))
     if limit <= 0:
         return {}
@@ -2066,11 +2087,14 @@ def _join_prune_predicates(ch, spec, cname) -> dict:
         conjs = []
         for ccol, ocol in pairs:
             if ccol not in cache:
-                rows = ch.select(ccol).where(
-                    F.col(ccol).isNotNull()).distinct() \
-                    .limit(limit + 1).collect()
-                cache[ccol] = ([r[0] for r in rows]
-                               if len(rows) <= limit else None)
+                if rows is not None:
+                    vals = list(set(rows.column(ccol).to_pylist())
+                                - {None})
+                else:
+                    vals = [r[0] for r in ch.select(ccol).where(
+                        F.col(ccol).isNotNull()).distinct()
+                        .limit(limit + 1).collect()]
+                cache[ccol] = vals if len(vals) <= limit else None
             vals = cache[ccol]
             if not vals:  # over budget (None) or empty window slice
                 continue
@@ -2165,16 +2189,8 @@ def _incremental_refresh_join(session, ent, t: StarTable,
         # signs ride the change frame through the join. Each pinned
         # side reads the version this step's algebra requires: old
         # cursor if its window is still unprocessed, new if committed.
-        # The change frame is materialized ONCE: the Δ-key pruning
-        # collects below and the delta SQL both re-read it. It stays a
-        # cluster-side checkpoint deliberately: it carries the full
-        # source row width, and a driver collect of wide rows pays
-        # py4j pickling that measured SLOWER than the checkpoint
-        # (round-11 A/B) — the capped-collect fast path is for the
-        # narrow O(touched-groups) aggregate frames only.
-        ch = ch.localCheckpoint(eager=True)
-        prune = _join_prune_predicates(ch, spec, cname)
-        frames = {cname: _flatten(ch, cname, keep=("_change_type",))}
+        prune = _join_prune_predicates(ch.frame, spec, cname, ch.table)
+        frames = {cname: _flatten(ch.frame, cname, keep=("_change_type",))}
         for other in spec["sources"]:
             if other == cname:
                 continue

@@ -194,12 +194,9 @@ def _mat_rollup(spark, df: DataFrame) -> "tuple[DataFrame, list | None]":
     partial frame (shared mat_local contract: Arrow collect + local
     relation under the cap, localCheckpoint above it). Same cap knob
     as the MV refresh intermediates."""
-    import os as _os
+    from starlake_spark.local import local_row_cap, mat_local
 
-    from starlake_spark.local import mat_local
-
-    cap = int(_os.environ.get("STARLAKE_MV_LOCAL_ROW_CAP", "131072"))
-    return mat_local(spark, df, cap)
+    return mat_local(spark, df, local_row_cap())
 
 
 def _minmax_threatened(spark, t: StarTable, partials: DataFrame,
@@ -431,7 +428,7 @@ def refresh_rollup(spark: SparkSession, t: StarTable) -> dict:
     if src_info.hash_cols:
         import os as _os
 
-        from starlake_spark.sources.datasource import range_changes
+        from starlake_spark.sources.datasource import shared_range_changes
 
         # driver-side pre-check, BEFORE any write: the window diff needs
         # its preimage files still on disk (cleanup retention ≫ refresh
@@ -454,8 +451,7 @@ def refresh_rollup(spark: SparkSession, t: StarTable) -> dict:
                 _lister.exists(_os.path.join(src.table_path, f.path))
                 for f in _expired)
         if window_ok:
-            ch = range_changes(spark, cfg["source"], start_version=last,
-                               end_version=cur)
+            ch = shared_range_changes(spark, cfg["source"], last, cur).frame
             partials = _signed_partials(ch, cfg["time_col"], cfg["bucket"],
                                         cfg["group_cols"], cfg["aggs"])
             has_mm = any(op in ("min", "max")
@@ -685,10 +681,10 @@ def _realtime_frame(spark: SparkSession, t: StarTable,
                    if f.path not in cur_paths]
         if all(lister.exists(_os.path.join(src.table_path, f.path))
                for f in expired):
-            from starlake_spark.sources.datasource import range_changes
+            from starlake_spark.sources.datasource import (
+                shared_range_changes)
 
-            ch = range_changes(spark, cfg["source"], start_version=last,
-                               end_version=cur)
+            ch = shared_range_changes(spark, cfg["source"], last, cur).frame
             tail = _signed_partials(ch, cfg["time_col"], cfg["bucket"],
                                     cfg["group_cols"], cfg["aggs"])
             if any(op in ("min", "max") for op in cfg["aggs"].values()):

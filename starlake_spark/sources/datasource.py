@@ -30,6 +30,9 @@ import dataclasses
 import json
 import os
 import re
+import threading
+from collections import Counter, OrderedDict
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -44,6 +47,10 @@ from pyspark.sql.datasource import (
 
 from starlake_spark.meta import (ManifestStore, MetaError,
                                  TableNotFoundError, decode_range_value)
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+    from pyspark.sql import DataFrame
 
 VERSION_COL = "_commit_version"
 CHANGE_TYPE_COL = "_change_type"
@@ -1599,16 +1606,30 @@ def range_changes(spark, path: str, start_version: int,
     and keys in files present on both sides are untouched by
     definition. Caveat: files expired in the window must still exist
     on disk (cleanup retention ≫ refresh cadence); a vacuumed file
-    raises at read time — callers fall back to a rebuild."""
+    raises at read time — callers fall back to a rebuild.
+
+    The returned frame is lazy: every action re-runs both scans and
+    the join. The engine's own consumers (MV, join-MV and rollup
+    refreshes, the real-time rollup read, replication, ANN index sync)
+    go through ``shared_range_changes`` instead, which materializes a
+    window once per session — one source commit usually feeds several
+    derived tables, and each would otherwise recompute the same diff."""
+    store = ManifestStore(path)
+    end = store.latest_version() if end_version is None else end_version
+    return _range_changes(spark, store, store.table_info(), start_version,
+                          end)[0]
+
+
+def _range_changes(spark, store: ManifestStore, info, start_version: int,
+                   end: int):
+    """``range_changes``' lazy frame plus the window's touched files
+    (the symmetric difference of the boundary snapshots' file sets)."""
     from starlake_spark.operators import reader as rd
 
-    store = ManifestStore(path)
-    info = store.table_info()
     if not info.hash_cols:
         raise ValueError("range_changes requires a hash-partitioned table "
                          "(key-level diffs need merge keys)")
     keys = info.range_cols + info.hash_cols
-    end = store.latest_version() if end_version is None else end_version
     start_snap, end_snap = store.snapshot(start_version), store.snapshot(end)
     sf = {f.path: f for f in start_snap.all_files()}
     ef = {f.path: f for f in end_snap.all_files()}
@@ -1616,8 +1637,7 @@ def range_changes(spark, path: str, start_version: int,
                + [f for p, f in sf.items() if p not in ef])
     if not touched:
         out = rd._empty_df(spark, info).withColumn(VERSION_COL, F_lit_long(None))
-        return out.withColumn(CHANGE_TYPE_COL,
-                              F_lit_str_null())
+        return out.withColumn(CHANGE_TYPE_COL, F_lit_str_null()), touched
     pre_snap, cur_snap = _pruned_boundaries(start_snap, end_snap, touched)
     dfs = _preimage_changes(spark, store, info, keys, start_version, end,
                             end, touched, pre_snap=pre_snap,
@@ -1625,7 +1645,100 @@ def range_changes(spark, path: str, start_version: int,
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d)
-    return out
+    return out, touched
+
+
+# Materialized change windows a session keeps (least recently used
+# out first). One source commit feeds every derived table built on the
+# source, each refreshed in turn, so a few recent windows cover it.
+WINDOW_CACHE_SIZE = 4
+_WINDOW_CACHE_ATTR = "_starlake_change_windows"
+_WINDOW_LOCK = threading.Lock()
+
+
+class ChangeWindow(NamedTuple):
+    """A change frame and, when its rows are held on the driver, the
+    same rows as an Arrow table (``None`` when the frame is a
+    cluster-side checkpoint or a lazy plan)."""
+    frame: "DataFrame"
+    table: "pa.Table | None" = None
+
+    def counts(self) -> dict:
+        """Rows per ``_change_type``: from the driver rows when held,
+        else one aggregate job over the frame."""
+        if self.table is not None:
+            return dict(Counter(
+                self.table.column(CHANGE_TYPE_COL).to_pylist()))
+        return {r[0]: r[1] for r in
+                self.frame.groupBy(CHANGE_TYPE_COL).count().collect()}
+
+
+def shared_range_changes(spark, path: str, start_version: int,
+                         end_version: int) -> ChangeWindow:
+    """``range_changes(spark, path, start_version, end_version)``'s rows,
+    materialized once per session and shared by every caller asking
+    for the same window.
+
+    Committed versions are immutable, so a window is identified by
+    ``(path, table_id, schema_json, configuration, start, end)``: the
+    table id tells a source recreated at the same path from the old
+    one, and the schema and properties (merge operators, rename
+    aliases) shape the boundary scans. The arm is chosen from a bound the manifest
+    already holds: every touched key emits at most an update pre/post
+    pair, so the window has at most 2 × Σ ``num_rows`` of its touched
+    files. When every count is known and that bound is within
+    ``STARLAKE_MV_LOCAL_ROW_CAP``, one Arrow collect brings the rows to
+    the driver and they re-enter Spark as a local relation; otherwise
+    (or with a cap <= 0, or a type Arrow cannot carry) the frame is an
+    eager ``localCheckpoint``. Both arms hold identical rows."""
+    from starlake_spark.local import local_row_cap
+
+    store = ManifestStore(path)
+    info = store.table_info()
+    key = (store.table_path, info.table_id, info.schema_json,
+           json.dumps(info.configuration or {}, sort_keys=True),
+           start_version, end_version)
+    with _WINDOW_LOCK:
+        cache = getattr(spark, _WINDOW_CACHE_ATTR, None)
+        if cache is None:
+            cache = OrderedDict()
+            setattr(spark, _WINDOW_CACHE_ATTR, cache)
+        win = cache.get(key)
+        if win is not None:
+            cache.move_to_end(key)
+            return win
+    df, touched = _range_changes(spark, store, info, start_version,
+                                 end_version)
+    cap = local_row_cap()
+    bound = 2 * sum(f.num_rows for f in touched)
+    arrow_schema = _arrow_schema_or_none(df.schema)
+    if (cap > 0 and arrow_schema is not None and bound <= cap
+            and all(f.num_rows >= 0 for f in touched)):
+        tbl = df.toArrow() if touched else arrow_schema.empty_table()
+        win = ChangeWindow(spark.createDataFrame(tbl, schema=df.schema), tbl)
+    else:
+        win = ChangeWindow(df.localCheckpoint(eager=True))
+    with _WINDOW_LOCK:
+        # a concurrent caller may have built the same window meanwhile:
+        # both hold identical rows, keep the first
+        win = cache.setdefault(key, win)
+        cache.move_to_end(key)
+        while len(cache) > WINDOW_CACHE_SIZE:
+            cache.popitem(last=False)
+    return win
+
+
+def _arrow_schema_or_none(schema: T.StructType):
+    """The Arrow schema ``toArrow`` would collect into, or None when a
+    column type has no Arrow form."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    try:
+        return to_arrow_schema(schema,
+                               error_on_duplicated_field_names_in_struct=True)
+    except PySparkException:
+        return None
 
 
 def F_lit_str_null():
@@ -1696,11 +1809,15 @@ def _preimage_changes(spark, store, info, keys, v_pre, v_cur, tag_version,
     from pyspark.sql import functions as F
     from starlake_spark.operators import reader as rd
 
+    # the boundary scans are the probe side of a left-semi join, which
+    # Spark never builds: no broadcast hint on them
     kdf = _window_key_frame(spark, store, info, keys, new_files)
     prev = rd.scan(spark, store, version=v_pre, snapshot=pre_snap,
-                   schema_as_of=False).join(kdf, keys, "left_semi")
+                   schema_as_of=False, broadcast_hint=False
+                   ).join(kdf, keys, "left_semi")
     cur = rd.scan(spark, store, version=v_cur, snapshot=cur_snap,
-                  schema_as_of=False).join(kdf, keys, "left_semi")
+                  schema_as_of=False, broadcast_hint=False
+                  ).join(kdf, keys, "left_semi")
     out_cols = list(prev.columns)
     data_cols = [c for c in out_cols if c not in keys]
     # presence flags live OUTSIDE the _p_/_c_ alias namespace, so a

@@ -135,7 +135,7 @@ def test_distinct_replay_and_partial_crash(sess, spark, sf_dir, tmp_path):
     cur = src_store.latest_version()
     ch = mv._change_window(spark, src_store, last, cur)
     cv = "_test_cd_ch"
-    ch.createOrReplaceTempView(cv)
+    ch.frame.createOrReplaceTempView(cv)
     try:
         assert mv._sync_distinct_aux(sess, spec, src_store, t, last,
                                      cur, cv) is True

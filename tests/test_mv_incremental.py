@@ -1729,6 +1729,33 @@ def test_join_prune_predicates_unit(spark):
     assert set(got4) == {"dim"}  # not "other" (no direct edge to fact)
 
 
+def test_join_prune_predicates_from_driver_rows(spark, monkeypatch):
+    """A change window held on the driver answers the Δ-key pruning
+    from its rows, never touching the frame (no Spark job), with the
+    predicates the capped collect builds."""
+    spec = {"join_pairs": [
+        {"lt": "fact", "rt": "dim", "l": "fact__ck", "r": "dim__ck2"},
+        {"lt": "dim", "rt": "other", "l": "dim__x", "r": "other__y"},
+    ]}
+    ch = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (2, None), (None, "it's")],
+        "ck2 bigint, x string")
+
+    def norm(preds):
+        return {t: (p.split(" IN (")[0],
+                    sorted(p.split(" IN (")[1].rstrip(")").split(", ")))
+                for t, p in preds.items()}
+
+    want = norm(mv._join_prune_predicates(ch, spec, "dim"))
+    assert want == {"fact": ("ck", ["1", "2"]),
+                    "other": ("y", ["'a'", "'b'", "'it''s'"])}
+    assert norm(mv._join_prune_predicates(None, spec, "dim",
+                                          ch.toArrow())) == want
+    monkeypatch.setenv("STARLAKE_MV_JOIN_PRUNE_KEY_LIMIT", "2")
+    assert set(mv._join_prune_predicates(None, spec, "dim",
+                                         ch.toArrow())) == {"fact"}
+
+
 def test_dim_window_prunes_fact_partitions_physically(sess, spark, sf_dir,
                                                       tmp_path):
     """With the fact range-partitioned on the join key, a dim-side

@@ -383,6 +383,44 @@ def test_mor_small_dim_broadcasts_from_manifest_hint(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760b")
 
+def _plan_shape(plan: str) -> str:
+    """A plan string without the ids that differ between two builds."""
+    import re
+
+    return re.sub(r"#\d+L?|plan_id=\d+", "#", plan)
+
+
+def test_semi_probe_scans_carry_no_broadcast_hint(spark, tmp_path):
+    """MoR scans that only feed the probe side of a left-semi join (the
+    CDC boundary scans, the MV backing-table prune) are built without
+    the manifest-size broadcast hint: Spark never builds that side and
+    logged the refused hint on every refresh. Dropping it leaves the
+    physical plan unchanged."""
+    from starlake_spark.operators import reader as rd
+    from starlake_spark.sources.datasource import range_changes
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    nation = spark.read.parquet(f"{SF}/nation.parquet")
+    t = create_table(spark, nation, str(tmp_path / "dim_n"),
+                     hash_partitions=["n_nationkey"], hash_bucket_num=2,
+                     configuration={"compaction.auto": "false"})
+    t.upsert(nation.limit(3).withColumn("n_name", F.lit("X")))
+    assert "ResolvedHint" in analyzed(t.to_df())  # the hint is live here
+    assert "ResolvedHint" not in analyzed(
+        range_changes(spark, t.store.table_path, 0, 1))
+    keys = spark.range(3).select(F.col("id").cast(
+        nation.schema["n_nationkey"].dataType).alias("n_nationkey"))
+    plans = {}
+    for hint in (True, False):
+        df = rd.scan(spark, t.store, broadcast_hint=hint).join(
+            keys, "n_nationkey", "left_semi")
+        assert ("ResolvedHint" in analyzed(df)) == hint
+        plans[hint] = _plan_shape(_phys(df))
+    assert plans[True] == plans[False]
+
+
 def test_python_murmur3_matches_spark_hash(spark):
     """Bucket pruning's in-process murmur3 must be bit-exact vs the
     JVM hash() the writer shuffled with — a single mismatch would read
