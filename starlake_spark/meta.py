@@ -200,6 +200,15 @@ class Snapshot:
     def all_files(self) -> list[DataFileInfo]:
         return [f for p in self.partitions.values() for f in p.files]
 
+    def rows_upper_bound(self) -> int | None:
+        """Σ ``num_rows`` of the live files: at least the rows a scan
+        returns (merged-away delta rows, tombstones and DV-deleted rows
+        all count). None when a file's count is unknown."""
+        files = self.all_files()
+        if any(f.num_rows < 0 for f in files):
+            return None
+        return sum(f.num_rows for f in files)
+
     def to_state(self) -> dict:
         return {
             "version": self.version,

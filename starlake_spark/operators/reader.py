@@ -42,6 +42,7 @@ keeps that fraction small; the reference relies on the same discipline
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 from collections import defaultdict
@@ -57,6 +58,8 @@ from starlake_spark.meta import (
     TableInfo,
     decode_range_value,
 )
+
+_log = logging.getLogger(__name__)
 
 _WV = "_star_wv"
 _ORD = "_star_ord_"  # per-column merge ordering prefix
@@ -161,32 +164,81 @@ _GROUP_SCHEMA_CACHE_MAX = 4096
 # Flat-scan gate: physical parquet schema per file, mapped to Spark
 # types (driver-side pyarrow footer read, ~ms on local disk — the same
 # footer the writer already stat-harvested). Cached forever: committed
-# files are immutable. None ⇒ the file's arrow schema has no clean
-# Spark mapping (fall back to per-group reads).
+# files are immutable. None ⇒ the file's schema has no clean Spark
+# mapping (fall back to per-group reads).
 _FILE_SCHEMA_CACHE: dict[str, "T.StructType | None"] = {}
 _FILE_SCHEMA_CACHE_MAX = 65536
+# Spark's own StructType JSON of the columns it wrote, in every footer
+# of a file Spark produced (ParquetWriteSupport.SPARK_METADATA_KEY)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _naive_ts_leaves(t) -> int:
+    """tz-naive timestamp leaves of one arrow type."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        return int(t.tz is None)
+    if pa.types.is_struct(t):
+        return sum(_naive_ts_leaves(t.field(i).type)
+                   for i in range(t.num_fields))
+    if pa.types.is_map(t):
+        return _naive_ts_leaves(t.key_type) + _naive_ts_leaves(t.item_type)
+    if pa.types.is_list(t) or pa.types.is_large_list(t) \
+            or pa.types.is_fixed_size_list(t):
+        return _naive_ts_leaves(t.value_type)
+    return 0
 
 
 def _file_spark_schema(abs_path: str) -> "T.StructType | None":
+    """The Spark types of one file's physical columns, exactly as
+    Spark's scan would infer them: Spark's own row metadata when the
+    footer carries it for these very columns, else the arrow mapping
+    with Spark's ``ParquetToSparkSchemaConverter`` rules — a tz-naive
+    timestamp is ``timestamp_ntz`` (isAdjustedToUTC=false), except a
+    physical INT96 one, which is ``timestamp`` (Spark's default
+    TimestampType encoding; pyarrow reads it tz-naive)."""
     if abs_path in _FILE_SCHEMA_CACHE:
         return _FILE_SCHEMA_CACHE[abs_path]
-    out: "T.StructType | None"
-    try:
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_type
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
-        pa_schema = pq.ParquetFile(abs_path).schema_arrow
-        # prefer_timestamp_ntz: a tz-naive parquet timestamp
-        # (isAdjustedToUTC=false — what Spark writes for TimestampNTZ
-        # columns) must map to timestamp_ntz, exactly as Spark's own
-        # scan inference does; tz-aware stays TimestampType
-        out = T.StructType([
-            T.StructField(f.name,
-                          from_arrow_type(f.type,
-                                          prefer_timestamp_ntz=True),
-                          True)
-            for f in pa_schema])
-    except Exception:  # unmappable type / unreadable footer → fallback
+    out: "T.StructType | None" = None
+    try:
+        pf = pq.ParquetFile(abs_path)
+        pa_schema = pf.schema_arrow
+        meta = (pa_schema.metadata or {}).get(_SPARK_ROW_METADATA)
+        spark_schema = None
+        if meta:
+            try:
+                spark_schema = T.StructType.fromJson(json.loads(meta))
+            except (ValueError, KeyError):
+                pass  # a type PySpark cannot name (a Scala-only UDT)
+        if spark_schema is not None and \
+                spark_schema.names == pa_schema.names:
+            out = T.StructType([T.StructField(f.name, f.dataType, True)
+                                for f in spark_schema.fields])
+        else:
+            leaves = pf.schema
+            int96 = sum(leaves.column(j).physical_type == "INT96"
+                        for j in range(len(leaves)))
+            # a file mixing INT96 and tz-naive INT64 timestamps has no
+            # single arrow mapping that types both: left None
+            if int96 in (0, sum(_naive_ts_leaves(f.type)
+                                for f in pa_schema)):
+                out = T.StructType([
+                    T.StructField(f.name,
+                                  from_arrow_type(
+                                      f.type,
+                                      prefer_timestamp_ntz=not int96),
+                                  True)
+                    for f in pa_schema])
+    except (OSError, ValueError, TypeError, NotImplementedError):
+        # unreadable footer (OSError; pyarrow's ArrowInvalid is a
+        # ValueError) or a type with no Spark mapping (PySparkTypeError
+        # is a TypeError, ArrowNotImplementedError a
+        # NotImplementedError): per-group reads serve the file.
+        # Anything else is a bug and propagates.
         out = None
     if len(_FILE_SCHEMA_CACHE) >= _FILE_SCHEMA_CACHE_MAX:
         _FILE_SCHEMA_CACHE.pop(next(iter(_FILE_SCHEMA_CACHE)))
@@ -269,8 +321,11 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
     plans exactly one, so plan analysis, py4j chatter and codegen stay
     O(1) as a partition's delta history grows.
     """
+    def refuse(reason: str) -> None:
+        _log.debug("flat scan refused for %s: %s", store.table_path, reason)
+
     if os.environ.get("STARLAKE_FLAT_SCAN") == "off":
-        return None
+        return refuse("STARLAKE_FLAT_SCAN=off")
     if per_row_cost or info.range_cols:
         # The flat relation probes its per-file constants PER ROW and
         # merges through one relation, while the union path gets them
@@ -289,7 +344,8 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
         deep = int(os.environ.get("STARLAKE_FLAT_SCAN_DEEP_GROUPS", "24"))
         total = sum(f.size for fs in groups.values() for f in fs)
         if len(groups) < deep and total > avg_cap * len(groups):
-            return None
+            return refuse(f"{len(groups)} groups of {total} B: "
+                          f"row-heavy and shallow")
     schema = _schema(info)
     declared = {f.name: f.dataType for f in schema.fields}
     expected = set(declared) - set(info.range_cols)
@@ -306,9 +362,11 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
         any_tomb |= has_tomb
         present = exist - {TOMBSTONE_COL}
         if not (present <= expected):
-            return None  # renamed / dropped / extra live column
+            # renamed / dropped / extra live column
+            return refuse(f"undeclared column(s) "
+                          f"{sorted(present - expected)} in v{wv}")
         if not (keys - set(info.range_cols) <= present):
-            return None  # merge keys must exist in every commit
+            return refuse(f"merge key(s) missing in v{wv}")
         for c in expected - present:
             # partial-column commit (round 11): the column reads as
             # NULL from this group's files via the explicit schema;
@@ -317,7 +375,8 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
             # path's per-branch null-ordering literal)
             absent.setdefault(c, set()).add(wv)
         if wv in seen_wv:
-            return None  # equal-version groups: keep union-path order
+            # equal-version groups: keep union-path order
+            return refuse(f"two commit groups at v{wv}")
         seen_wv.add(wv)
         for f in fs:
             fd = os.path.dirname(f.path if os.path.isabs(f.path) else
@@ -331,37 +390,41 @@ def _flat_read_plan(store: ManifestStore, info: TableInfo, groups: dict,
                 parts = fd.split("/")
                 if len(segs) != len(info.range_cols) or \
                         len(parts) <= len(segs):
-                    return None
+                    return refuse(f"range value {f.range_value!r} "
+                                  f"does not match the range columns")
                 for c, seg, dseg in zip(info.range_cols, segs,
                                         parts[-len(segs):]):
                     name, eq, val = seg.partition("=")
                     dname, deq, dval = dseg.partition("=")
                     if (name != c or dname != c or not eq or not deq
                             or _unescape_path(dval) != val):
-                        return None
+                        return refuse(f"file dir {dseg!r} is not "
+                                      f"range value {seg!r}")
                     vals.append(None if val == "__HIVE_DEFAULT_PARTITION__"
                                 else val)
             k, consts = _dir_key(fd, levels), (wv, tuple(vals))
             if key_dir.setdefault(k, fd) != fd:
-                return None  # two dirs share a probe key
+                return refuse(f"two dirs share probe key {k!r}")
             if dir_map.setdefault(k, consts) != consts:
-                return None
+                return refuse(f"dir {k!r} maps to two versions")
         first = fs[0].path
         first_abs = first if os.path.isabs(first) else \
             os.path.join(store.table_path, first)
         ps = _file_spark_schema(first_abs)
         if ps is None:
-            return None
+            return refuse(f"no Spark type mapping for {first}")
         have = {f.name: f.dataType for f in ps.fields}
         for n, dt in declared.items():
             if n in info.range_cols or n not in present:
                 continue  # probed per file / null-backfilled
             h = have.get(n)
             if h is None or h.simpleString() != dt.simpleString():
-                return None
+                return refuse(f"type {n}: "
+                              f"{h.simpleString() if h else 'absent'} "
+                              f"!= {dt.simpleString()} in v{wv}")
         if has_tomb and not isinstance(have.get(TOMBSTONE_COL),
                                        (T.BooleanType, type(None))):
-            return None
+            return refuse(f"tombstone column is not boolean in v{wv}")
     fields = [T.StructField(f.name, f.dataType, True, f.metadata)
               for f in schema.fields if f.name not in info.range_cols]
     if any_tomb:
@@ -590,7 +653,10 @@ def _plain_scan(
         # plain scans carry zero per-row work, so only the range-column
         # probe gates on size.
         flat = _flat_read_plan(store, info, groups, per_row_cost=False)
-        if flat is not None and not flat[2]:
+        if flat is not None and flat[2]:
+            _log.debug("flat scan refused for %s: tombstone files in a "
+                       "plain scan", store.table_path)
+        elif flat is not None:
             u = _flat_relation(spark, store, info, files, flat[0], flat[1],
                                probe=bool(info.range_cols))
             return u.select(*[F.col(f.name) for f in _schema(info).fields])

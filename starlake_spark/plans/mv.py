@@ -734,6 +734,43 @@ def _fingerprints(session, names) -> dict[str, int]:
     return {n: session.table(n).store.latest_version() for n in names}
 
 
+def _tree_tables(tree: dict) -> set[str]:
+    """Source tables whose columns an expression tree reads (its
+    AttributeReferences are ``table.column``)."""
+    if _cls(tree) == "AttributeReference":
+        return {tree["name"].lower().split(".", 1)[0]}
+    return set().union(*(_tree_tables(c) for c in tree["_children"]))
+
+
+# Hash buckets of a view's backing table: DERIVED_MAX_BUCKETS (the
+# count every view had before sizing) unless a row bound is at most
+# DERIVED_ONE_BUCKET_ROWS. Apart from the STARLAKE_MV_LOCAL_ROW_CAP
+# collect knob on purpose: a bucket count is a permanent layout.
+DERIVED_MAX_BUCKETS = 16
+DERIVED_ONE_BUCKET_ROWS = 131072
+
+
+def _derived_buckets(session, spec, fps) -> int:
+    """Hash buckets for an incremental view's backing table, fixed at
+    creation, from manifest row counts at the build's pinned versions —
+    no job. A source contributes at most its rows (+1 for a
+    NULL-extended outer side) distinct values to a view row, so the
+    view holds at most Π (rows + 1) over the sources its group keys
+    read. An empty source or an unknown count bounds nothing (a view
+    created before its sources are loaded) and keeps the ceiling. A
+    1-bucket table merges without a shuffle while its files fit one
+    read split; if it grows, its upserts and compactions still run as
+    one task."""
+    bound = 1
+    for n in set().union(*(g["tables"] for g in spec["groups"])):
+        rows = (session.table(n).store.snapshot(fps[n]).rows_upper_bound()
+                if n in fps else None)
+        if not rows:
+            return DERIVED_MAX_BUCKETS
+        bound *= rows + 1
+    return 1 if bound <= DERIVED_ONE_BUCKET_ROWS else DERIVED_MAX_BUCKETS
+
+
 def _source_ids(session, names) -> dict[str, str]:
     """table_id per source — identity, not just version. A source
     dropped and recreated at the same path restarts version numbering,
@@ -1010,7 +1047,8 @@ def _incremental_spec_inner(session, sql_text: str, known: set[str],
     try:
         for (nm, cn), (_nm, tree) in zip(vinfo.outputs, vinfo.output_trees):
             if cn in group_canons:
-                groups.append({"out": nm, "sql": to_sql(tree, colmap)})
+                groups.append({"out": nm, "sql": to_sql(tree, colmap),
+                               "tables": _tree_tables(tree)})
                 continue
             t = tree
             if _cls(t) == "Alias":
@@ -2278,7 +2316,8 @@ def create_material_view(session, name: str, path: str, sql_text: str,
                 warehouse=session.warehouse,
                 # global aggregate: single-row table, no upsert keys
                 hash_partitions=keys or None,
-                hash_bucket_num=16 if keys else -1,
+                hash_bucket_num=(_derived_buckets(session, spec, fps)
+                                 if keys else -1),
                 # GROUP BY keys may be NULL (SQL semantics; the
                 # reference's MV suite never refuses them) — the
                 # backing table must accept NULL hash keys or a single

@@ -420,3 +420,153 @@ def test_single_bucket_merge_above_split_size_keeps_exchange(
         spark.conf.set(key, old)
     assert "Exchange" in plan
     assert [r.k for r in rows] == [7]
+
+
+# -- exact footer types: Spark's row metadata, INT96 as TimestampType --
+
+def _ts_table(spark, path, ts_type):
+    """A churned MoR table with a ``ts_type`` column: updates move the
+    timestamps, a tombstone delete and a resurrect follow."""
+    df = spark.range(0, 200).select(
+        F.col("id").alias("k"),
+        F.expr(f"CAST(timestamp_seconds(1700000000 + id * 3600) "
+               f"AS {ts_type})").alias("ts"),
+        (F.col("id") * 1.5).alias("bal"))
+    t = create_table(spark, df, path, hash_partitions=["k"],
+                     hash_bucket_num=2, configuration=NO_COMPACT)
+    t.upsert(df.filter("k % 3 = 0").withColumn(
+        "ts", F.expr(f"CAST(ts + INTERVAL 1 DAY AS {ts_type})")))
+    t.delete("k % 11 = 0", use_delta=True)
+    t.upsert(df.filter("k % 22 = 0").withColumn("bal", F.lit(-1.0)))
+    return t
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_flat_serves_timestamp_columns(spark, tmp_table_dir, monkeypatch,
+                                       ts_type):
+    """Spark writes a TimestampType column as INT96, which pyarrow reads
+    tz-naive; the gate types it from Spark's own footer row metadata,
+    so timestamp tables take the single-relation merge like any other
+    (and timestamp_ntz keeps working)."""
+    from starlake_spark.operators import reader as rd
+    t = _ts_table(spark, tmp_table_dir, ts_type)
+    first = t.store.snapshot().all_files()[0].path
+    assert rd._file_spark_schema(
+        os.path.join(t.store.table_path, first))["ts"].dataType \
+        .simpleString() == ts_type
+    groups = rd._group_files(t.store.snapshot().all_files())
+    assert rd._flat_read_plan(t.store, t.store.table_info(),
+                              groups) is not None
+    plan = t.to_df()._jdf.queryExecution().executedPlan().toString()
+    assert plan.split("== Initial Plan ==")[0].count("FileScan") == 1
+    _flat_equals_union_every_version(t, monkeypatch)
+
+
+def test_flat_serves_int96_file_without_spark_metadata(spark, tmp_path,
+                                                       monkeypatch):
+    """A file no Spark wrote (pyarrow, INT96 timestamps, no row
+    metadata) adopted by CONVERT TO STAR: its INT96 column reads as
+    TimestampType, as Spark's schema converter reads it, so the flat
+    plain scan serves it next to a Spark-written commit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from starlake_spark.operators import reader as rd
+    from starlake_spark.table import convert_to_star
+    src = tmp_path / "adopt"
+    src.mkdir()
+    tbl = pa.table({
+        "k": pa.array(range(20), pa.int64()),
+        "ts": pa.array([1_700_000_000_000_000 + i * 10**9
+                        for i in range(20)], pa.timestamp("us")),
+        "tags": pa.array([[i, i + 1] for i in range(20)],
+                         pa.list_(pa.int64())),
+    })
+    path = str(src / "part-0.parquet")
+    pq.write_table(tbl, path, use_deprecated_int96_timestamps=True)
+    assert pq.ParquetFile(path).schema.column(1).physical_type == "INT96"
+    assert pq.ParquetFile(path).schema_arrow.metadata is None or \
+        rd._SPARK_ROW_METADATA not in pq.ParquetFile(
+            path).schema_arrow.metadata
+    assert rd._file_spark_schema(path).simpleString() == \
+        "struct<k:bigint,ts:timestamp,tags:array<bigint>>"
+    t = convert_to_star(spark, str(src), configuration=NO_COMPACT)
+    assert t.to_df().schema["ts"].dataType.simpleString() == "timestamp"
+    t.write(spark.sql("SELECT CAST(id AS BIGINT) AS k, "
+                      "timestamp_seconds(1800000000 + id) AS ts, "
+                      "array(id) AS tags FROM range(100, 105)"))
+    groups = rd._group_files(t.store.snapshot().all_files())
+    assert len(groups) == 2
+    assert rd._flat_read_plan(t.store, t.store.table_info(), groups,
+                              per_row_cost=False) is not None
+    _flat_equals_union_every_version(t, monkeypatch)
+    assert t.to_df().count() == 25
+
+
+def test_range_changes_on_timestamp_keyed_table(spark, tmp_table_dir,
+                                                monkeypatch):
+    """The rollup's shape — a hash table keyed on a TimestampType column
+    — diffs through the flat arm to the union arm's rows."""
+    df = spark.sql(
+        "SELECT timestamp_seconds(1700000000 + (id % 40) * 86400) AS ts, "
+        "CAST(id DIV 40 AS INT) AS g, CAST(id AS DECIMAL(18,2)) AS s "
+        "FROM range(0, 160)")
+    t = create_table(spark, df, tmp_table_dir, hash_partitions=["ts", "g"],
+                     hash_bucket_num=2, configuration=NO_COMPACT)
+    t.upsert(df.filter("g = 1").withColumn("s", F.col("s") + 1))
+    t.delete("g = 2", use_delta=True)
+    t.upsert(df.filter("g = 2").withColumn("s", F.lit(0).cast(
+        "decimal(18,2)")))
+    from starlake_spark.operators import reader as rd
+    from starlake_spark.sources import datasource as ds
+    groups = rd._group_files(t.store.snapshot().all_files())
+    assert rd._flat_read_plan(t.store, t.store.table_info(),
+                              groups) is not None
+    for start in range(1, t.store.latest_version()):
+        for end in range(start + 1, t.store.latest_version() + 1):
+            monkeypatch.setenv("STARLAKE_FLAT_SCAN", "off")
+            ref = _rows(ds.range_changes(spark, tmp_table_dir, start, end))
+            monkeypatch.delenv("STARLAKE_FLAT_SCAN")
+            got = _rows(ds.range_changes(spark, tmp_table_dir, start, end))
+            assert got == ref, (start, end)
+            assert got, (start, end)
+
+
+def test_window_key_frame_of_one_commit_runs_no_job(spark, tmp_table_dir):
+    """A one-commit window's key frame reads with the declared key
+    schema: building it launches no schema-inference job."""
+    from starlake_spark.sources import datasource as ds
+    df = _mk_df(spark, 100)
+    t = create_table(spark, df, tmp_table_dir, hash_partitions=["k"],
+                     hash_bucket_num=2, configuration=NO_COMPACT)
+    before = {f.path for f in t.store.snapshot().all_files()}
+    t.upsert(df.filter("k % 9 = 0").withColumn("bal", F.lit(0.0)))
+    new = [f for f in t.store.snapshot().all_files()
+           if f.path not in before]
+    sc = spark.sparkContext
+    gid = "keyframe-probe"
+    sc.setJobGroup(gid, "key frame build")
+    try:
+        kdf = ds._window_key_frame(spark, t.store, t.store.table_info(),
+                                   ["k"], new)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+    assert sorted(r.k for r in kdf.collect()) == list(range(0, 100, 9))
+
+
+def test_flat_gate_logs_its_refusal(spark, tmp_table_dir, caplog):
+    """Each refusal says why at DEBUG level on the reader's logger."""
+    import logging
+    from starlake_spark.operators import reader as R
+    df = _mk_df(spark)
+    t = create_table(spark, df, tmp_table_dir,
+                     hash_partitions=["k"], hash_bucket_num=2,
+                     configuration=NO_COMPACT)
+    t.upsert(df.filter(F.col("k") % 2 == 0))
+    t.rename_column("nm", "label")
+    groups = R._group_files(t.store.snapshot().all_files())
+    with caplog.at_level(logging.DEBUG, logger=R.__name__):
+        assert R._flat_read_plan(t.store, t.store.table_info(refresh=True),
+                                 groups) is None
+    msgs = [r.getMessage() for r in caplog.records if r.name == R.__name__]
+    assert any("undeclared column(s) ['nm']" in m for m in msgs), msgs
