@@ -79,11 +79,12 @@ def main() -> None:
 
     from starlake_spark.operators import dml, writer, reader
     from starlake_spark.plans import mv, rollup
+    from starlake_spark.sources import datasource
     from starlake_spark import meta, table as tbl
     for m, fn_ in [(writer, "write_files"), (dml, "upsert"), (dml, "delete"),
                    (dml, "write_into"), (dml, "delete_keys"), (dml, "update"),
                    (dml, "_commit_tombstones"), (dml, "compact"),
-                   (mv, "_change_window"), (mv, "_apply_delta"),
+                   (datasource, "change_window"), (mv, "_apply_delta"),
                    (mv, "create_material_view"), (mv, "_mv_init_frame"),
                    (mv, "_sync_distinct_aux"), (mv, "_prune_touched"),
                    (tbl, "create_table"),

@@ -40,19 +40,34 @@ def local_row_cap() -> int:
     return int(os.environ.get("STARLAKE_MV_LOCAL_ROW_CAP", "131072"))
 
 
-def mat_local(spark: SparkSession, df: DataFrame,
-              cap: int) -> "tuple[DataFrame, list | None]":
+def arrow_schema_or_none(schema: T.StructType):
+    """The Arrow schema ``toArrow`` would collect ``schema`` into, or
+    None when a column type has no Arrow form — the one test of "can an
+    Arrow collect carry this frame" every driver-local arm makes."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    try:
+        return to_arrow_schema(schema,
+                               error_on_duplicated_field_names_in_struct=True)
+    except PySparkException:
+        return None
+
+
+def mat_local(spark: SparkSession,
+              df: DataFrame) -> "tuple[DataFrame, list | None]":
     """Materialize a small intermediate driver-locally: one
     Arrow-serialized collect (``toArrow`` — no per-row py4j pickling),
     re-entering Spark as a JVM-held Arrow relation, so every downstream
     probe (counts, emptiness, threat splits) is answered from the
     returned row tuples with ZERO further Spark jobs and every
     downstream plan roots in a LocalRelation instead of a checkpointed
-    RDD scan. Returns (frame, rows); above ``cap`` rows the frame falls
-    back to ``localCheckpoint`` and rows is None — the cap bounds
-    driver memory, NOT correctness: both arms compute the identical
-    frame. ``cap <= 0`` forces the checkpoint arm (kill switch)."""
-    if cap > 0:
+    RDD scan. Returns (frame, rows); above ``local_row_cap()`` rows, or
+    for a type Arrow cannot carry, the frame falls back to
+    ``localCheckpoint`` and rows is None — the cap bounds driver
+    memory, NOT correctness: both arms compute the identical frame."""
+    cap = local_row_cap()
+    if cap > 0 and arrow_schema_or_none(df.schema) is not None:
         # CollectLimit's incremental execution (1 partition, then
         # scale-up) would schedule SEVERAL jobs over an aggregate
         # child; these frames are expected under the cap, so grab
@@ -63,14 +78,12 @@ def mat_local(spark: SparkSession, df: DataFrame,
         spark.conf.set(key, "2147483647")
         try:
             tbl = df.limit(cap + 1).toArrow()
-        except Exception:  # noqa: BLE001 — unconvertible type → cluster-side
-            tbl = None
         finally:
             if prev is None:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, prev)
-        if tbl is not None and tbl.num_rows <= cap:
+        if tbl.num_rows <= cap:
             frame = spark.createDataFrame(tbl, schema=df.schema)
             rows = list(zip(*(c.to_pylist() for c in tbl.columns)))
             return frame, rows

@@ -79,6 +79,7 @@ def sync_table(spark: SparkSession, source, target_path: str,
     read but still O(diff) written."""
     import os
 
+    from starlake_spark.meta import MetaError
     from starlake_spark.sources.datasource import (
         CHANGE_TYPE_COL, VERSION_COL, shared_range_changes)
     from starlake_spark.table import StarTable, create_table
@@ -137,7 +138,7 @@ def sync_table(spark: SparkSession, source, target_path: str,
         # retention (expire_manifests) may have aged it out on a replica
         # that slept past the source's retention window
         src.store.snapshot(v0)
-    except Exception:
+    except MetaError:
         stats = _full_sync(spark, src, t)
         t.set_properties({VERSION_PROP: str(src_version)})
         stats.update(mode="full_fallback", from_version=v0,

@@ -43,16 +43,15 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
 
-from starlake_spark import catalog
+from starlake_spark import catalog, local
 from starlake_spark.local import local_df
-from starlake_spark.meta import ManifestStore, MetaError
+from starlake_spark.meta import ManifestStore
 from starlake_spark.operators import reader
+from starlake_spark.sources import datasource
 from starlake_spark.table import StarTable, create_table
 
 if TYPE_CHECKING:
     import pyarrow as pa
-
-    from starlake_spark.sources.datasource import ChangeWindow
 
 
 class UnsupportedPlan(Exception):
@@ -1276,79 +1275,6 @@ def _prune_touched(old: DataFrame, dkeys: DataFrame, keys: list[str],
     return old.join(dkeys, semi, "left_semi")
 
 
-def _change_window(spark, src: ManifestStore, last: int,
-                   cur: int) -> "ChangeWindow | str | None":
-    """The signed change frame for source versions (last, cur]:
-    a ChangeWindow whose frame carries ``_change_type``, the string
-    ``"noop"`` when the window provably changed nothing, or None (→
-    full rebuild: cursor manifest expired, history rewritten, or a
-    deletion-vector change an append-only diff cannot express).
-
-    Hash sources read the session's shared window
-    (``shared_range_changes``): the GROUP BY MV, the join MV, the
-    distinct-agg aux tables and the rollups over one source all consume
-    the same (last, cur] diff, materialized once. Append-only sources
-    return a lazy plain scan of the window's new files, which is as
-    cheap to re-read as a checkpoint of it."""
-    from starlake_spark.sources.datasource import (ChangeWindow,
-                                                   shared_range_changes)
-
-    info = src.table_info()
-    try:
-        last_snap = src.snapshot(last)
-    except MetaError:
-        return None  # cursor manifest expired → full rebuild
-    last_files = last_snap.all_files()
-    if info.hash_cols:
-        # the window diff reads preimages; a vacuumed one → full
-        # rebuild (same guard as refresh_rollup). Probes are BOUNDED to
-        # the files the window will actually open that vacuum could
-        # have taken: files EXPIRED inside the window (in the cursor
-        # snapshot, gone from the current one). Files still live at
-        # ``cur`` are never vacuumed, and range_changes cell-prunes its
-        # boundary scans to the touched (partition, bucket) cells, so
-        # no other cursor-snapshot file is opened — probing all of them
-        # (the old behavior) is O(table) serial HEADs on an object
-        # store, minutes of driver stall per refresh at 10^5+ files.
-        # The reference never pre-probes at all (it reads lazily and
-        # lets a missing file fail the scan, DataOperation.scala:52-119);
-        # the caller's full-fallback catch gives the same safety net.
-        from starlake_spark.listing import get_lister
-
-        lister = get_lister()
-        try:
-            cur_paths = {f.path for f in src.snapshot(cur).all_files()}
-        except MetaError:
-            return None
-        expired = [f for f in last_files if f.path not in cur_paths]
-        if not all(lister.exists(os.path.join(src.table_path, f.path))
-                   for f in expired):
-            return None
-        return shared_range_changes(spark, src.table_path, last, cur)
-    prev_paths = {f.path for f in last_files}
-    cur_snap = src.snapshot(cur)
-    cur_files = cur_snap.all_files()
-    if not prev_paths <= {f.path for f in cur_files}:
-        return None  # compaction/delete rewrote history → full
-
-    # deletion vectors delete rows WITHOUT touching data-file paths
-    # or write_versions (all_files() excludes the sidecars,
-    # meta.py PartitionSnapshot.dv_files) — a DV-only window would
-    # pass the path guard, see new_files=[], and the deleted rows
-    # would silently never be retracted. Any dv-set change forces
-    # the full-refresh fallback.
-    def _dv_paths(s):
-        return {d.path for p in s.partitions.values() for d in p.dv_files}
-
-    if _dv_paths(last_snap) != _dv_paths(cur_snap):
-        return None
-    new_files = [f for f in cur_files if f.write_version > last]
-    if not new_files:
-        return "noop"
-    return ChangeWindow(reader._plain_scan(spark, src, info, new_files)
-                        .withColumn("_change_type", F.lit("insert")))
-
-
 def _rescan_inlist(spec, tkeys_rows, cols_dt) -> list[str]:
     """Best-effort file-prune conjuncts for the rescan scan: when a
     group expr is a bare source column of a literal-encodable type and
@@ -1394,24 +1320,6 @@ def _rescan_inlist(spec, tkeys_rows, cols_dt) -> list[str]:
         if pred:
             out.append(pred)
     return out
-
-
-def _mat_touched(spark, df: DataFrame) -> "tuple[DataFrame, list | None]":
-    """Materialize an O(touched-groups)-small refresh intermediate:
-    capped driver collect + Arrow-local relation, so every downstream
-    probe (counts, emptiness, threat splits) is answered from the
-    driver rows with ZERO Spark jobs and every downstream plan roots in
-    a JVM-held LocalRelation instead of a checkpointed RDD scan
-    (optimization round 11, guide §5 — the refresh cycle used to pay a
-    localCheckpoint job plus one job per probe). Returns (frame, rows);
-    rows is None above the cap, where the frame falls back to
-    ``localCheckpoint`` exactly as before (windows touching more than
-    ``STARLAKE_MV_LOCAL_ROW_CAP`` groups keep the cluster-side shape —
-    the cap bounds driver memory, NOT correctness: both arms compute
-    the identical frame)."""
-    from starlake_spark.local import local_row_cap, mat_local
-
-    return mat_local(spark, df, local_row_cap())
 
 
 def _pykey(vals) -> tuple:
@@ -1467,7 +1375,7 @@ def _rescan_frame(spark, spec, pinned_src, tkeys, n_thr: int,
         rs = spark.sql(_mv_init_sql(spec, from_view=rv))
         cast = [F.col(c).cast(old_dt[c]).alias(c) for c in rs.columns
                 if c in old_dt]
-        return _mat_touched(spark, rs.select(*cast))
+        return local.mat_local(spark, rs.select(*cast))
     finally:
         try:
             spark.catalog.dropTempView(rv)
@@ -1574,7 +1482,7 @@ def _sync_distinct_aux(session, spec, src: ManifestStore, t: StarTable,
             if astart == last:
                 ch_v = cv
             else:
-                ch2 = _change_window(spark, src, astart, cur)
+                ch2 = datasource.change_window(spark, src, astart, cur)
                 if ch2 is None:
                     return False
                 if isinstance(ch2, str):  # noop tail
@@ -1582,7 +1490,7 @@ def _sync_distinct_aux(session, spec, src: ManifestStore, t: StarTable,
                 drop_v = f"_mv_aux_{uuid.uuid4().hex[:10]}"
                 ch2.frame.createOrReplaceTempView(drop_v)
                 ch_v = drop_v
-            delta2, d2rows = _mat_touched(spark, spark.sql(
+            delta2, d2rows = local.mat_local(spark, spark.sql(
                 _aux_delta_sql(spec, a, ch_v, signed=True)))
             _merge_aux(spark, aux_t, delta2, keys + ["_dx"], app, cur,
                        n_rows=len(d2rows) if d2rows is not None else None)
@@ -1750,7 +1658,7 @@ def _apply_delta(spark, t: StarTable, spec, delta: DataFrame,
     # each re-run the change-window scan and the backing-table join.
     # Capped driver collect (round 11): when the rows fit on the
     # driver, every probe below is answered from them with no job.
-    full_all, frows = _mat_touched(
+    full_all, frows = local.mat_local(
         spark, m.select(*keys, *finals, *hcols, F.col("_mv_rescan_")))
     fa_cols = full_all.columns
     ri = fa_cols.index("_mv_rescan_")
@@ -1784,7 +1692,7 @@ def _apply_delta(spark, t: StarTable, spec, delta: DataFrame,
         # the recount joined aux-table scans back in: re-materialize so
         # the live/dead split below stays row-known (and the write does
         # not re-run the recount join per consumer)
-        full, fold_rows = _mat_touched(spark, full)
+        full, fold_rows = local.mat_local(spark, full)
         fold_cols = full.columns
     live = (full.filter(F.col(f"{_MVH}n") > 0).select(*out_cols))
     dead = full.filter(F.col(f"{_MVH}n") <= 0).select(*keys)
@@ -1879,6 +1787,21 @@ def _apply_delta(spark, t: StarTable, spec, delta: DataFrame,
                    txn_app_id=txn_app, txn_version=txn_version)
 
 
+def _delta_stats(delta: DataFrame,
+                 drows: "list | None") -> "tuple[int, bool]":
+    """(row count, may_die) of a materialized delta frame: the
+    broadcast-budget count, and whether some group's signed row-count
+    contribution is negative (only then can a folded group die). From
+    the driver rows when held, else one aggregate over the checkpoint."""
+    if drows is not None:
+        ni = delta.columns.index(f"{_MVH}n")
+        return len(drows), any(r[ni] is not None and r[ni] < 0
+                               for r in drows)
+    st = delta.agg(F.count(F.lit(1)).alias("c"),
+                   F.min(F.col(f"{_MVH}n")).alias("mn")).first()
+    return st["c"], st["mn"] is not None and st["mn"] < 0
+
+
 def _incremental_refresh(session, ent,
                          t: StarTable) -> "tuple[str, dict] | None":
     """Try the O(changes) refresh; None → caller runs the full path.
@@ -1898,7 +1821,7 @@ def _incremental_refresh(session, ent,
     src = ManifestStore(spec["source_path"])
     last = ent["fingerprints"].get(spec["source"])
     cur = src.latest_version()
-    if last is None or cur < last:
+    if last is None:
         return None
     # EXACTLY-ONCE: the refresh's upsert is gated on the monotonic txn
     # registry (txn_app_id below) with the consumed SOURCE version as
@@ -1912,15 +1835,10 @@ def _incremental_refresh(session, ent,
     # runs BEFORE the gated upsert, so every partial-crash state
     # replays correctly (post-delete pre-upsert: stamp unchanged, the
     # replayed recompute over already-deleted groups is identical).
+    # A source rolled back behind the cursor resolves to None → full.
     txn_app = f"mv_refresh:{t.info.table_id}"
-    stamp = t.store.snapshot().streaming.get(f"txn:{txn_app}", -1)
-    if stamp > last:
-        last = stamp
-        if cur < last:
-            return None  # source rolled back past the stamp → full
-    if cur == last:
-        return ("noop", {spec["source"]: cur})
-    ch = _change_window(spark, src, last, cur)
+    last = max(last, t.store.snapshot().streaming.get(f"txn:{txn_app}", -1))
+    ch = datasource.change_window(spark, src, last, cur)
     if ch is None:
         return None
     if isinstance(ch, str):  # "noop"
@@ -1946,8 +1864,8 @@ def _incremental_refresh(session, ent,
         # broadcast-budget count below would otherwise each re-run the
         # change-window scan. Driver-local rows (when under the cap)
         # answer the count/min probe with no extra job.
-        delta, drows = _mat_touched(spark,
-                                    spark.sql(_mv_delta_sql(spec, cv)))
+        delta, drows = local.mat_local(spark,
+                                       spark.sql(_mv_delta_sql(spec, cv)))
         pinned_src = None
         if any(a.get("rescan") for a in spec["aggs"]):
             # rescan target: the source PINNED at the window end (cur).
@@ -1962,21 +1880,9 @@ def _incremental_refresh(session, ent,
                      if where else None)
                 return _t.to_df(version=_v, where=w)
 
-        # broadcast-budget count + minimum signed group contribution
-        # (dead-group possibility): from the driver rows when local,
-        # else one aggregate over the checkpoint
-        if drows is not None:
-            dni = delta.columns.index(f"{_MVH}n")
-            n_delta = len(drows)
-            mns = [r[dni] for r in drows if r[dni] is not None]
-            mn = min(mns) if mns else None
-        else:
-            st = delta.agg(F.count(F.lit(1)).alias("c"),
-                           F.min(F.col(f"{_MVH}n")).alias("mn")).first()
-            n_delta, mn = st["c"], st["mn"]
+        n_delta, may_die = _delta_stats(delta, drows)
         _apply_delta(spark, t, spec, delta, n_delta, txn_app, cur,
-                     pinned_src=pinned_src,
-                     may_die=mn is not None and mn < 0)
+                     pinned_src=pinned_src, may_die=may_die)
         return ("incremental", {spec["source"]: cur})
     finally:
         spark.catalog.dropTempView(cv)
@@ -2214,7 +2120,7 @@ def _incremental_refresh_join(session, ent, t: StarTable,
     for cname in spec["sources"]:
         if cname not in changed:
             continue
-        ch = _change_window(spark, stores[cname], cursors[cname],
+        ch = datasource.change_window(spark, stores[cname], cursors[cname],
                             curs[cname])
         if ch is None:
             return None  # window unreadable → full rebuild (safe after
@@ -2243,22 +2149,12 @@ def _incremental_refresh_join(session, ent, t: StarTable,
         jv = f"_mv_jch_{uuid.uuid4().hex[:10]}"
         signed.createOrReplaceTempView(jv)
         try:
-            delta, drows = _mat_touched(
+            delta, drows = local.mat_local(
                 spark, spark.sql(_mv_delta_sql(spec, jv)))
-            txn_app = f"mv_refresh:{t.info.table_id}:{cname}"
-            if drows is not None:
-                dni = delta.columns.index(f"{_MVH}n")
-                n_delta = len(drows)
-                mns = [r[dni] for r in drows if r[dni] is not None]
-                mn = min(mns) if mns else None
-            else:
-                st = delta.agg(F.count(F.lit(1)).alias("c"),
-                               F.min(F.col(f"{_MVH}n")).alias("mn")) \
-                    .first()
-                n_delta, mn = st["c"], st["mn"]
-            _apply_delta(spark, t, spec, delta, n_delta, txn_app,
-                         curs[cname],
-                         may_die=mn is not None and mn < 0)
+            n_delta, may_die = _delta_stats(delta, drows)
+            _apply_delta(spark, t, spec, delta, n_delta,
+                         f"mv_refresh:{t.info.table_id}:{cname}",
+                         curs[cname], may_die=may_die)
             mode = "incremental"
         finally:
             spark.catalog.dropTempView(jv)

@@ -19,12 +19,17 @@ here is the point:
   accumulated partials without changing results (compaction
   invariance), keeping read amplification flat.
 
-Incremental refresh is only sound when source commits are pure
-appends. Two guards: the source must have no hash columns (upserts
-REPLACE key versions — not additive), and every commit since the last
-refresh must keep all previously-live files (an update/delete/
-compact/replaceWhere expires files and fails the subset check). Any
-violation falls back to a full rebuild — never a wrong result.
+A refresh folds the source's change window since its cursor, resolved
+by the one resolver every derived table uses
+(``sources.datasource.change_window``): the coalesced signed CDC on a
+hash source (upserts net new - old, deletes retract), the new files on
+an append-only one. It falls back to a full rebuild — never a wrong
+result — when the cursor's source version has expired from the
+manifest log, a file the window must read was vacuumed, an append-only
+source's history was rewritten (update / delete / compaction dropped
+files live at the cursor) or a deletion vector changed, the source was
+recreated at the same path or rolled back behind the cursor, or a
+min/max window threatens more stored extrema than the rescan cap.
 """
 
 from __future__ import annotations
@@ -33,36 +38,69 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from starlake_spark import local
 from starlake_spark.local import local_df
 from starlake_spark.meta import ManifestStore
 from starlake_spark.operators import dml, reader
+from starlake_spark.sources import datasource
 from starlake_spark.table import StarTable, create_table
 
 _CFG = "rollup."
 _VALID_AGGS = ("sum", "min", "max", "count", "avg")
 
 
-def _partials(df: DataFrame, time_col: str, bucket: str,
-              group_cols: list[str], aggs: dict[str, str]) -> DataFrame:
-    """Partial (mergeable) aggregate state for one batch of source rows.
-    sum/count/avg keep sums+counts, min/max keep extrema — all of which
-    merge across refreshes through the corresponding MoR merge operator.
-    Sums go through DECIMAL(28,6) so accumulation order (which differs
-    between incremental and full paths) cannot change the result."""
+def _partials(df: DataFrame, cfg: dict) -> DataFrame:
+    """Partial (mergeable) aggregate state of a batch of source rows per
+    (bucket_ts, group) cell. sum/count/avg keep sums+counts, min/max
+    keep extrema — all of which merge across refreshes through the
+    corresponding MoR merge operator. Sums go through DECIMAL(28,6) so
+    accumulation order (which differs between incremental and full
+    paths) cannot change the result.
+
+    A frame carrying ``_change_type`` (a hash source's change window) is
+    signed: inserts and update_postimages count +1, deletes and
+    update_preimages -1, so an UPDATE nets (new - old) and a DELETE a
+    retraction. Its min/max fold postimages only and add an ``_rt_``
+    probe, the most threatening retracted value per cell (consumed by
+    _minmax_threatened, never written to the rollup table). Any other
+    frame counts each row with the literal sign 1."""
+    ct = datasource.CHANGE_TYPE_COL
+    retracts = ct in df.columns
+    if retracts:
+        df = df.withColumn(
+            "_sign", F.when(F.col(ct).isin("insert", "update_postimage"),
+                            F.lit(1))
+                      .when(F.col(ct).isin("delete", "update_preimage"),
+                            F.lit(-1))).filter(F.col("_sign").isNotNull())
+    sign = F.col("_sign") if retracts else F.lit(1)
+    post = sign == 1
     exprs = []
-    for c, op in aggs.items():
+    for c, op in cfg["aggs"].items():
         if op in ("sum", "avg"):
-            exprs.append(F.sum(F.col(c).cast("decimal(28,6)")).alias(f"{c}_sum"))
+            exprs.append(F.sum(F.col(c).cast("decimal(28,6)") * sign)
+                         .alias(f"{c}_sum"))
         if op in ("avg", "count"):
-            exprs.append(F.count(F.col(c)).alias(f"{c}_cnt"))
-        if op == "min":
-            exprs.append(F.min(c).alias(f"{c}_min"))
-        if op == "max":
-            exprs.append(F.max(c).alias(f"{c}_max"))
-    exprs.append(F.count(F.lit(1)).alias("n_rows"))
-    return (df.groupBy(F.date_trunc(bucket, F.col(time_col)).alias("bucket_ts"),
-                       *group_cols)
+            exprs.append(F.sum(F.when(F.col(c).isNotNull(), sign)
+                               .otherwise(F.lit(0))).cast("long")
+                         .alias(f"{c}_cnt"))
+        if op in ("min", "max"):
+            f = F.min if op == "min" else F.max
+            exprs.append(f(F.when(post, F.col(c))).alias(f"{c}_{op}"))
+            if retracts:
+                exprs.append(f(F.when(~post, F.col(c)))
+                             .alias(f"_rt_{c}_{op}"))
+    exprs.append(F.sum(sign).cast("long").alias("n_rows"))
+    return (df.groupBy(F.date_trunc(cfg["bucket"], F.col(cfg["time_col"]))
+                       .alias("bucket_ts"), *cfg["group_cols"])
               .agg(*exprs))
+
+
+def _source_partials(spark, src: ManifestStore, version: int,
+                     cfg: dict) -> DataFrame:
+    """Partials of the whole source as of ``version`` (create and full
+    rebuild)."""
+    return _partials(reader.scan(spark, src, version=version,
+                                 schema_as_of=False), cfg)
 
 
 def _merge_ops_for(aggs: dict[str, str]) -> dict[str, str]:
@@ -108,8 +146,9 @@ def create_rollup(
     # only stream_rollup refuses the shape (its insert-only
     # micro-batches cannot see retractions).
     cur = src.latest_version()
-    partials = _partials(reader.scan(spark, src, version=cur, schema_as_of=False),
-                         time_col, bucket, group_cols, aggs)
+    partials = _source_partials(spark, src, cur, {
+        "time_col": time_col, "bucket": bucket, "group_cols": group_cols,
+        "aggs": aggs})
     t = create_table(
         spark, partials, rollup_path,
         hash_partitions=["bucket_ts"] + group_cols,
@@ -154,51 +193,6 @@ def _cfg(t: StarTable) -> dict:
     }
 
 
-def _signed_partials(ch: DataFrame, time_col: str, bucket: str,
-                     group_cols: list[str], aggs: dict[str, str]) -> DataFrame:
-    """Signed (retractable) partials from a typed CDC frame: inserts and
-    update_postimages contribute +1, deletes and update_preimages -1 —
-    so an UPDATE nets (new - old), a DELETE nets a retraction, and the
-    rollup's sum merge-ops accumulate the difference. Only sound for
-    sum/count/avg (create_rollup enforces that for hash sources)."""
-    sign = (F.when(F.col("_change_type").isin("insert", "update_postimage"),
-                   F.lit(1))
-             .when(F.col("_change_type").isin("delete", "update_preimage"),
-                   F.lit(-1)))
-    ch = ch.withColumn("_sign", sign).filter(F.col("_sign").isNotNull())
-    post = F.col("_sign") == 1
-    exprs = []
-    for c, op in aggs.items():
-        if op in ("sum", "avg"):
-            exprs.append(F.sum(F.col(c).cast("decimal(28,6)")
-                               * F.col("_sign")).alias(f"{c}_sum"))
-        if op in ("avg", "count"):
-            exprs.append(F.sum(F.when(F.col(c).isNotNull(), F.col("_sign"))
-                               .otherwise(F.lit(0))).cast("long").alias(f"{c}_cnt"))
-        if op in ("min", "max"):
-            # postimage fold + the MOST THREATENING retracted value per
-            # cell (the `_rt_` probe — consumed by _minmax_threatened,
-            # never written to the rollup table)
-            f = F.min if op == "min" else F.max
-            exprs.append(f(F.when(post, F.col(c))).alias(f"{c}_{op}"))
-            exprs.append(f(F.when(~post, F.col(c)))
-                         .alias(f"_rt_{c}_{op}"))
-    exprs.append(F.sum("_sign").cast("long").alias("n_rows"))
-    return (ch.groupBy(F.date_trunc(bucket, F.col(time_col)).alias("bucket_ts"),
-                       *group_cols)
-              .agg(*exprs))
-
-
-def _mat_rollup(spark, df: DataFrame) -> "tuple[DataFrame, list | None]":
-    """Capped driver-local materialization of an O(touched-cells)
-    partial frame (shared mat_local contract: Arrow collect + local
-    relation under the cap, localCheckpoint above it). Same cap knob
-    as the MV refresh intermediates."""
-    from starlake_spark.local import local_row_cap, mat_local
-
-    return mat_local(spark, df, local_row_cap())
-
-
 def _minmax_threatened(spark, t: StarTable, partials: DataFrame,
                        cfg: dict, partial_rows: "list | None" = None):
     """Split a signed hash-window partial frame into (threatened_cells,
@@ -225,8 +219,6 @@ def _minmax_threatened(spark, t: StarTable, partials: DataFrame,
           if op in ("min", "max")]
     keys = ["bucket_ts"] + cfg["group_cols"]
     probes = [f"_rt_{c}_{op}" for c, op in mm]
-    if not mm:
-        return None, partials, []
     clean = partials.drop(*probes)
     pfilter = None
     for p in probes:
@@ -325,8 +317,7 @@ def _rescan_cells(spark, src: ManifestStore, cfg: dict, cur: int,
     # the rescan computes inside that consumer's job instead of paying
     # an eager checkpoint job of its own (round-11; determinism comes
     # from the pinned version, not the materialization)
-    return _partials(pruned, cfg["time_col"], cfg["bucket"],
-                     cfg["group_cols"], cfg["aggs"])
+    return _partials(pruned, cfg)
 
 
 def _cell_condition(keys: list[str], rows) -> "str | None":
@@ -361,20 +352,69 @@ def _cell_condition(keys: list[str], rows) -> "str | None":
     return " OR ".join(conds)
 
 
-def refresh_rollup(spark: SparkSession, t: StarTable) -> dict:
-    """Advance the rollup to the source's latest version.
+def _cursor(t: StarTable, cfg: dict,
+            src: ManifestStore) -> "tuple[int, int, bool]":
+    """(last, cur, reanchor): the window (last, cur] that advances the
+    rollup ``t`` to its source's latest version.
 
-    Append-only sources: incremental when every commit since the cursor
-    was a pure append (all previously-live files still live).
-    Hash-partitioned sources: incremental through the COALESCED range
-    CDC (sources.range_changes — the net state diff for keys touched
-    in the window, exactly two key-pruned MoR scans regardless of how
-    many commits accumulated): upserts net (new - old), deletes net
-    retractions, intermediate churn cancels; correct under delta DML,
-    CoW rewrites, compaction and restore alike (symmetric file-set
-    diff). Falls back to a full rebuild only if a window file was
-    already vacuumed. Returns {"mode": "noop"|"incremental"|"full",
-    "from": v, "to": v}.
+    The txn-registry stamp is the AUTHORITATIVE cursor (same contract
+    as MV refresh): a crash between the gated write (stamp = cur_old)
+    and the property save leaves stamp > last_version; restarting the
+    window at the stale property would re-apply the already-merged
+    [last, stamp] partials into any NEW window (the gate alone only
+    stops an identical replay) — resume from the stamp instead.
+
+    ``reanchor``: the cursor no longer names a version of this source,
+    so only a full recompute is right — the source was dropped and
+    recreated at the same path (an identity check, not version
+    arithmetic: the new incarnation restarts version numbering, so a
+    window over it is over UNRELATED content even when cur > last), or
+    the cursor is AHEAD of the source's latest version."""
+    last = max(cfg["last_version"], t.store.snapshot().streaming.get(
+        f"txn:rollup_refresh:{t.info.table_id}", -1))
+    cur = src.latest_version()
+    recreated = (cfg["source_table_id"] is not None
+                 and src.table_info().table_id != cfg["source_table_id"])
+    return last, cur, recreated or cur < last
+
+
+def _window_partials(spark, t: StarTable, cfg: dict, src: ManifestStore,
+                     last: int, cur: int, reanchor: bool):
+    """The partials of source versions (last, cur] to fold into the
+    rollup ``t``: ``"noop"`` when the window changed nothing, None when
+    only a full recompute is exact (a reanchored cursor, an unreadable
+    window — see ``datasource.change_window`` — or a min/max threat set
+    over the rescan cap), else (partials, threatened_cells,
+    threatened_rows) as _minmax_threatened splits them, with
+    threatened_cells None when no stored extremum needs a rescan."""
+    ch = None if reanchor else datasource.change_window(spark, src, last,
+                                                        cur)
+    if ch is None or isinstance(ch, str):
+        return ch
+    frame = ch.frame
+    if not src.table_info().hash_cols:
+        # an append-only window holds inserts only: unsigned partials,
+        # no retraction probes, so no threat split
+        frame = frame.drop(datasource.CHANGE_TYPE_COL)
+    partials = _partials(frame, cfg)
+    if not any(c.startswith("_rt_") for c in partials.columns):
+        return partials, None, []
+    partials, prows = local.mat_local(spark, partials)
+    thr, safe, rows = _minmax_threatened(spark, t, partials, cfg,
+                                         partial_rows=prows)
+    return None if thr == "overflow" else (safe, thr, rows)
+
+
+def refresh_rollup(spark: SparkSession, t: StarTable) -> dict:
+    """Advance the rollup to the source's latest version by folding the
+    window's partials into it — an upsert the MoR merge operators add
+    to the stored state. Hash sources fold the COALESCED range CDC (the
+    net state diff for keys touched in the window): upserts net
+    (new - old), deletes net retractions, intermediate churn cancels;
+    correct under delta DML, CoW rewrites, compaction and restore
+    alike. Append-only sources fold the window's new files. Falls back
+    to a full rebuild where the module docstring lists. Returns
+    {"mode": "noop"|"incremental"|"full", "from": v, "to": v}.
     """
     cfg = _cfg(t)
     if (t.info.configuration or {}).get(_CFG + "streaming") == "true":
@@ -382,35 +422,18 @@ def refresh_rollup(spark: SparkSession, t: StarTable) -> dict:
             "this rollup is maintained by stream_rollup; a manual "
             "refresh would double-count its micro-batches")
     src = ManifestStore(cfg["source"])
-    last, cur = cfg["last_version"], src.latest_version()
-    # the txn-registry stamp is the AUTHORITATIVE cursor (same contract
-    # as MV refresh): a crash between the gated write (stamp = cur_old)
-    # and the property save leaves stamp > last_version; restarting the
-    # window at the stale property would re-apply the already-merged
-    # [last, stamp] partials into any NEW window (the gate alone only
-    # stops an identical replay) — resume from the stamp instead
-    stamp = t.store.snapshot().streaming.get(
-        f"txn:rollup_refresh:{t.info.table_id}", -1)
-    if stamp > last:
-        last = stamp
-    src_info = src.table_info()
-    # identity check, not just version arithmetic: a source dropped and
-    # recreated at the same path restarts version numbering, so its
-    # window [last, cur] is over UNRELATED content even when cur > last
-    recreated = (cfg["source_table_id"] is not None
-                 and src_info.table_id != cfg["source_table_id"])
-    if cur == last and not recreated:
+    last, cur, reanchor = _cursor(t, cfg, src)
+    if cur == last and not reanchor:
         return {"mode": "noop", "from": last, "to": cur}
-    # cur < last: the cursor (or txn stamp) is AHEAD of the source's
-    # latest version — the source was recreated at the same path or its
-    # version files pruned. Reporting noop would serve stale data
-    # forever; mirror the MV path (mv.py _change_window) and fall
-    # through to the full rebuild.
-    rolled_back = cur < last or recreated
-
-    def _full_overwrite(partials):
-        key = f"rollup_refresh:{t.info.table_id}"
-        if rolled_back:
+    key = f"rollup_refresh:{t.info.table_id}"
+    win = _window_partials(spark, t, cfg, src, last, cur, reanchor)
+    if isinstance(win, tuple) and win[1] is not None:
+        cond = _cell_condition(["bucket_ts"] + cfg["group_cols"], win[2])
+        if cond is None:
+            win = None  # a threatened cell key with no literal form
+    if win is None:
+        partials = _source_partials(spark, src, cur, cfg)
+        if reanchor:
             # the GATED write would silently no-op (the stale stamp is
             # >= cur, which the registry reads as a replay): commit the
             # overwrite with an unconditional cursor RESET instead —
@@ -420,130 +443,30 @@ def refresh_rollup(spark: SparkSession, t: StarTable) -> dict:
         else:
             dml.write_into(spark, t.store, partials, mode="overwrite",
                            txn_app_id=key, txn_version=cur)
-
-    def _save_cursor():
-        t.set_properties({_CFG + "last_version": str(cur),
-                          _CFG + "source_table_id": src_info.table_id})
-
-    if src_info.hash_cols:
-        import os as _os
-
-        from starlake_spark.sources.datasource import shared_range_changes
-
-        # driver-side pre-check, BEFORE any write: the window diff needs
-        # its preimage files still on disk (cleanup retention ≫ refresh
-        # cadence in practice); a vacuumed one → rebuild. Probes are
-        # BOUNDED to files EXPIRED in the window — the only ones vacuum
-        # can have taken (live files are never swept, and range_changes
-        # cell-prunes its scans to touched cells) — not the cursor
-        # snapshot's whole inventory: O(window churn) HEADs, not
-        # O(table). Probes route through the lister seam.
-        from starlake_spark.listing import get_lister
-
-        _lister = get_lister()
-        if rolled_back:
-            window_ok = False
-        else:
-            _cur_paths = {f.path for f in src.snapshot(cur).all_files()}
-            _expired = [f for f in src.snapshot(last).all_files()
-                        if f.path not in _cur_paths]
-            window_ok = all(
-                _lister.exists(_os.path.join(src.table_path, f.path))
-                for f in _expired)
-        if window_ok:
-            ch = shared_range_changes(spark, cfg["source"], last, cur).frame
-            partials = _signed_partials(ch, cfg["time_col"], cfg["bucket"],
-                                        cfg["group_cols"], cfg["aggs"])
-            has_mm = any(op in ("min", "max")
-                         for op in cfg["aggs"].values())
-            thr = None
-            rows = None
-            cond = None
-            if has_mm:
-                partials, prows = _mat_rollup(spark, partials)
-                thr, partials, rows = _minmax_threatened(
-                    spark, t, partials, cfg, partial_rows=prows)
-            keys = ["bucket_ts"] + cfg["group_cols"]
-            if thr is not None:
-                cond = (_cell_condition(keys, rows)
-                        if thr != "overflow" else None)
-                if cond is None:
-                    window_ok = False  # storm-sized threat set or
-                    # unrenderable key type → full rebuild below
-            if window_ok and thr is not None:
-                # threatened cells: replace wholesale with pinned
-                # full-cell recomputes — a CoW predicate delete (the
-                # rollup's hash layout prunes it to the cells' files)
-                # then absolute rows inside the gated upsert. Crash
-                # replay: a deleted cell reads as absent stored state
-                # → threatened again → identical recompute; the safe
-                # fold is gated.
-                rs = _rescan_cells(spark, src, cfg, cur, thr,
-                                   cell_rows=rows)
-                dml.delete(spark, t.store, condition=cond,
-                           use_delta=False)
-                dml.upsert(spark, t.store, partials.unionByName(rs),
-                           txn_app_id=f"rollup_refresh:{t.info.table_id}",
-                           txn_version=cur)
-                mode = "incremental"
-            elif window_ok:
-                # idempotent: a crash between this commit and the
-                # cursor save replays the window — the txn registry
-                # (keyed by the rollup table id, versioned by the
-                # consumed SOURCE version) makes the replayed upsert a
-                # no-op instead of a double-count
-                dml.upsert(spark, t.store, partials,
-                           txn_app_id=f"rollup_refresh:{t.info.table_id}",
-                           txn_version=cur)
-                mode = "incremental"
-        if not window_ok:
-            # vacuumed window, rollback, or a threatened-cell set too
-            # large/unrenderable for the predicate delete
-            partials = _partials(reader.scan(spark, src, version=cur, schema_as_of=False),
-                                 cfg["time_col"], cfg["bucket"],
-                                 cfg["group_cols"], cfg["aggs"])
-            _full_overwrite(partials)
-            mode = "full"
-        _save_cursor()
-        return {"mode": mode, "from": last, "to": cur}
-
-    if rolled_back:
-        append_only = False  # snapshot(last) may not even resolve
+        mode = "full"
+    elif win == "noop":
+        mode = "noop"
     else:
-        last_snap, cur_snap = src.snapshot(last), src.snapshot(cur)
-        prev_paths = {f.path for f in last_snap.all_files()}
-        cur_files = cur_snap.all_files()
-        append_only = prev_paths <= {f.path for f in cur_files}
-
-        # deletion vectors delete rows WITHOUT touching data-file paths
-        # — a DV-only window would look append-only with zero new files
-        # and the deleted rows would never be retracted from the
-        # rollup. Any dv-set change forces the full rebuild (same guard
-        # as MV refresh).
-        def _dv_paths(s):
-            return {d.path for p in s.partitions.values()
-                    for d in p.dv_files}
-
-        if _dv_paths(last_snap) != _dv_paths(cur_snap):
-            append_only = False
-
-    if append_only:
-        new_files = [f for f in cur_files if f.write_version > last]
-        new_rows = reader._plain_scan(spark, src, src.table_info(), new_files)
-        partials = _partials(new_rows, cfg["time_col"], cfg["bucket"],
-                             cfg["group_cols"], cfg["aggs"])
-        # idempotent under cursor-save crashes (see the hash path note)
-        dml.upsert(spark, t.store, partials,
-                   txn_app_id=f"rollup_refresh:{t.info.table_id}",
+        partials, thr, rows = win
+        if thr is not None:
+            # threatened cells: replace wholesale with pinned full-cell
+            # recomputes — a CoW predicate delete (the rollup's hash
+            # layout prunes it to the cells' files) then absolute rows
+            # inside the gated upsert. Crash replay: a deleted cell
+            # reads as absent stored state → threatened again →
+            # identical recompute; the safe fold is gated.
+            dml.delete(spark, t.store, condition=cond, use_delta=False)
+            partials = partials.unionByName(
+                _rescan_cells(spark, src, cfg, cur, thr, cell_rows=rows))
+        # idempotent: a crash between this commit and the cursor save
+        # replays the window — the txn registry (keyed by the rollup
+        # table id, versioned by the consumed SOURCE version) makes the
+        # replayed upsert a no-op instead of a double-count
+        dml.upsert(spark, t.store, partials, txn_app_id=key,
                    txn_version=cur)
         mode = "incremental"
-    else:
-        partials = _partials(reader.scan(spark, src, version=cur, schema_as_of=False),
-                             cfg["time_col"], cfg["bucket"],
-                             cfg["group_cols"], cfg["aggs"])
-        _full_overwrite(partials)
-        mode = "full"
-    _save_cursor()
+    t.set_properties({_CFG + "last_version": str(cur),
+                      _CFG + "source_table_id": src.table_info().table_id})
     return {"mode": mode, "from": last, "to": cur}
 
 
@@ -585,9 +508,7 @@ def stream_rollup(
     sink = StarStreamSink(t.store, query_id, "update")
 
     def fb(batch_df, batch_id):
-        partials = _partials(batch_df.drop("_commit_version"),
-                             cfg["time_col"], cfg["bucket"],
-                             cfg["group_cols"], cfg["aggs"])
+        partials = _partials(batch_df.drop(datasource.VERSION_COL), cfg)
         sink.write_batch(partials, batch_id)
 
     stream = (spark.readStream.format("star")
@@ -638,10 +559,8 @@ def read_rollup_realtime(spark: SparkSession, t: StarTable) -> DataFrame:
     cadence keeps the tail tiny while readers never see stale buckets,
     and a read-only replica can serve fresh results without write
     permission. Result-identical to refresh-then-read (differential
-    test); falls back to a full source recompute exactly where a
-    refresh would full-rebuild (rolled-back/recreated source, vacuumed
-    hash window, non-append commits or DV changes on an append-only
-    source)."""
+    test); serves a full source recompute wherever the window resolves
+    to a full rebuild (module docstring)."""
     cfg = _cfg(t)
     return _finalize(_realtime_frame(spark, t, cfg), cfg)
 
@@ -652,92 +571,26 @@ def _realtime_frame(spark: SparkSession, t: StarTable,
     materialized partials combined with the live window's partials.
     Exposed separately for the rollup-serving rewriter, which must
     re-aggregate partials (a finalized avg cannot regroup)."""
-    import os as _os
-
     src = ManifestStore(cfg["source"])
-    last, cur = cfg["last_version"], src.latest_version()
-    stamp = t.store.snapshot().streaming.get(
-        f"txn:rollup_refresh:{t.info.table_id}", -1)
-    if stamp > last:
-        last = stamp
-    src_info = src.table_info()
-    recreated = (cfg["source_table_id"] is not None
-                 and src_info.table_id != cfg["source_table_id"])
-    if cur == last and not recreated:
-        return t.to_df(merge_operators=_merge_ops_for(cfg["aggs"]))
-
-    tail = None  # partial frame of the un-refreshed window, or None
-    replace_thr = None  # min/max cells the tail's retractions threaten
-    thr_rows = None  # their collected rows (driver-side lower bound)
-    full = cur < last or recreated
-    if not full and src_info.hash_cols:
-        # same bounded probe as refresh_rollup: only files vacuum could
-        # have taken (expired inside the window) are HEADed
-        from starlake_spark.listing import get_lister
-
-        lister = get_lister()
-        cur_paths = {f.path for f in src.snapshot(cur).all_files()}
-        expired = [f for f in src.snapshot(last).all_files()
-                   if f.path not in cur_paths]
-        if all(lister.exists(_os.path.join(src.table_path, f.path))
-               for f in expired):
-            from starlake_spark.sources.datasource import (
-                shared_range_changes)
-
-            ch = shared_range_changes(spark, cfg["source"], last, cur).frame
-            tail = _signed_partials(ch, cfg["time_col"], cfg["bucket"],
-                                    cfg["group_cols"], cfg["aggs"])
-            if any(op in ("min", "max") for op in cfg["aggs"].values()):
-                # read-only analog of the refresh rescan: threatened
-                # cells are REPLACED by pinned full-cell recomputes in
-                # the merged view instead of folded; a threat set over
-                # the rescan cap serves the full recompute instead
-                tail, trows = _mat_rollup(spark, tail)
-                replace_thr, tail, thr_rows = _minmax_threatened(
-                    spark, t, tail, cfg, partial_rows=trows)
-                if replace_thr == "overflow":
-                    full = True
-        else:
-            full = True
-    elif not full:
-        last_snap, cur_snap = src.snapshot(last), src.snapshot(cur)
-        cur_files = cur_snap.all_files()
-
-        def _dv(s):
-            return {d.path for p in s.partitions.values()
-                    for d in p.dv_files}
-
-        if {f.path for f in last_snap.all_files()} <= \
-                {f.path for f in cur_files} \
-                and _dv(last_snap) == _dv(cur_snap):
-            new_files = [f for f in cur_files if f.write_version > last]
-            if new_files:
-                rows = reader._plain_scan(spark, src, src.table_info(),
-                                          new_files)
-                tail = _partials(rows, cfg["time_col"], cfg["bucket"],
-                                 cfg["group_cols"], cfg["aggs"])
-        else:
-            full = True  # history rewritten under the cursor
-
-    if full:
-        return _partials(reader.scan(spark, src, version=cur,
-                                     schema_as_of=False),
-                         cfg["time_col"], cfg["bucket"],
-                         cfg["group_cols"], cfg["aggs"])
-    base = t.to_df(merge_operators=_merge_ops_for(cfg["aggs"]))
-    if tail is None and replace_thr is None:
-        return base  # window provably changed nothing
+    last, cur, reanchor = _cursor(t, cfg, src)
+    win = _window_partials(spark, t, cfg, src, last, cur, reanchor)
+    if win is None:
+        return _source_partials(spark, src, cur, cfg)
     ops = _merge_ops_for(cfg["aggs"])
+    base = t.to_df(merge_operators=ops)
+    if win == "noop":
+        return base
+    tail, thr, thr_rows = win
     keys = ["bucket_ts"] + cfg["group_cols"]
     merged = (base.select(*keys, *ops)
               .unionByName(tail.select(*keys, *ops))
               .groupBy(*keys)
-              .agg(*[getattr(F, op)(c).alias(c) for c, op in ops.items()])
-              ) if tail is not None else base.select(*keys, *ops)
-    if replace_thr is not None:
-        rs = _rescan_cells(spark, src, cfg, cur, replace_thr,
-                           cell_rows=thr_rows)
-        tt = replace_thr
+              .agg(*[getattr(F, op)(c).alias(c) for c, op in ops.items()]))
+    if thr is not None:
+        # read-only analog of the refresh rescan: threatened cells are
+        # REPLACED by pinned full-cell recomputes instead of folded
+        rs = _rescan_cells(spark, src, cfg, cur, thr, cell_rows=thr_rows)
+        tt = thr
         for k in keys:
             tt = tt.withColumnRenamed(k, k + "__t")
         acond = None

@@ -1691,7 +1691,7 @@ def shared_range_changes(spark, path: str, start_version: int,
     the driver and they re-enter Spark as a local relation; otherwise
     (or with a cap <= 0, or a type Arrow cannot carry) the frame is an
     eager ``localCheckpoint``. Both arms hold identical rows."""
-    from starlake_spark.local import local_row_cap
+    from starlake_spark.local import arrow_schema_or_none, local_row_cap
 
     store = ManifestStore(path)
     info = store.table_info()
@@ -1711,7 +1711,7 @@ def shared_range_changes(spark, path: str, start_version: int,
                                  end_version)
     cap = local_row_cap()
     bound = 2 * sum(f.num_rows for f in touched)
-    arrow_schema = _arrow_schema_or_none(df.schema)
+    arrow_schema = arrow_schema_or_none(df.schema)
     if (cap > 0 and arrow_schema is not None and bound <= cap
             and all(f.num_rows >= 0 for f in touched)):
         tbl = df.toArrow() if touched else arrow_schema.empty_table()
@@ -1728,17 +1728,72 @@ def shared_range_changes(spark, path: str, start_version: int,
     return win
 
 
-def _arrow_schema_or_none(schema: T.StructType):
-    """The Arrow schema ``toArrow`` would collect into, or None when a
-    column type has no Arrow form."""
-    from pyspark.errors import PySparkException
-    from pyspark.sql.pandas.types import to_arrow_schema
+def change_window(spark, store: ManifestStore, start_version: int,
+                  end_version: int) -> "ChangeWindow | str | None":
+    """The signed change frame a derived table folds to advance its
+    cursor from ``start_version`` to ``end_version``: a ChangeWindow
+    whose frame carries ``_change_type``, the string ``"noop"`` when the
+    window provably changed nothing, or None when the window cannot be
+    read and the caller must rebuild in full:
 
-    try:
-        return to_arrow_schema(schema,
-                               error_on_duplicated_field_names_in_struct=True)
-    except PySparkException:
+    * the cursor's manifest version has expired (``expire_manifests``),
+      or lies past the table's latest version (rolled back);
+    * a file the window must read was vacuumed;
+    * on an append-only table, a commit dropped files live at the
+      cursor (update / delete / compaction rewrote history) or a
+      deletion vector changed — neither is an insert-only diff.
+
+    Every derived refresh resolves its window here: the GROUP BY MV,
+    each side of the join MV, the distinct-agg aux tables,
+    ``refresh_rollup`` and the real-time rollup read. Hash tables read
+    the session's shared window (``shared_range_changes``), so all the
+    tables derived from one source consume one diff, materialized once.
+    Append-only tables return a lazy plain scan of the window's new
+    files, as cheap to re-read as a checkpoint of it."""
+    from pyspark.sql import functions as F
+
+    from starlake_spark.listing import get_lister
+    from starlake_spark.operators import reader as rd
+
+    if end_version == start_version:
+        return "noop"
+    if end_version < start_version:
         return None
+    try:
+        start_snap = store.snapshot(start_version)
+        end_snap = store.snapshot(end_version)
+    except MetaError:
+        return None
+    end_files = end_snap.all_files()
+    end_paths = {f.path for f in end_files}
+    expired = [f for f in start_snap.all_files() if f.path not in end_paths]
+    info = store.table_info()
+    if info.hash_cols:
+        # the diff reads the expired files' preimages. Only they can
+        # have been vacuumed (live files never are, and range_changes
+        # cell-prunes its boundary scans to the touched cells), so the
+        # probes stay O(window churn) HEADs, not O(table)
+        lister = get_lister()
+        if not all(lister.exists(os.path.join(store.table_path, f.path))
+                   for f in expired):
+            return None
+        return shared_range_changes(spark, store.table_path, start_version,
+                                    end_version)
+
+    # deletion vectors delete rows WITHOUT touching data-file paths or
+    # write versions (all_files() excludes the sidecars), so a DV-only
+    # window would pass the path check with no new files and never
+    # retract the deleted rows
+    def dv_paths(snap):
+        return {d.path for p in snap.partitions.values() for d in p.dv_files}
+
+    if expired or dv_paths(start_snap) != dv_paths(end_snap):
+        return None
+    new_files = [f for f in end_files if f.write_version > start_version]
+    if not new_files:
+        return "noop"
+    return ChangeWindow(rd._plain_scan(spark, store, info, new_files)
+                        .withColumn(CHANGE_TYPE_COL, F.lit("insert")))
 
 
 def F_lit_str_null():

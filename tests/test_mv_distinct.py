@@ -127,13 +127,14 @@ def test_distinct_replay_and_partial_crash(sess, spark, sf_dir, tmp_path):
     spec = mv._incremental_spec(sess, ent["sql"])
     spec["aux_paths"] = ent["aux_paths"]
     from starlake_spark.meta import ManifestStore
+    from starlake_spark.sources import datasource
     from starlake_spark.table import StarTable
 
     src_store = ManifestStore(spec["source_path"])
     t = StarTable.for_path(spark, ent["path"])
     last = ent["fingerprints"]["src"]
     cur = src_store.latest_version()
-    ch = mv._change_window(spark, src_store, last, cur)
+    ch = datasource.change_window(spark, src_store, last, cur)
     cv = "_test_cd_ch"
     ch.frame.createOrReplaceTempView(cv)
     try:

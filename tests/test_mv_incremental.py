@@ -26,6 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from starlake_spark.plans import mv
+from starlake_spark.sources import datasource
 
 
 @pytest.fixture()
@@ -973,7 +974,7 @@ def test_join_mv_crash_between_sequential_steps(sess, spark, sf_dir,
 def test_join_mv_unreadable_window_full_fallback(sess, spark, sf_dir,
                                                  tmp_path):
     """If any step's window is unreadable (cursor manifest expired →
-    _change_window None), the whole refresh falls back to the full
+    change_window None), the whole refresh falls back to the full
     rebuild — even when another source's window was processable."""
     ft, dt, fact, dim = _join_fixtures(sess, spark, sf_dir, tmp_path)
     mv.create_material_view(sess, "mv_j", str(tmp_path / "mv"), JOIN_MV_SQL)
@@ -984,7 +985,7 @@ def test_join_mv_unreadable_window_full_fallback(sess, spark, sf_dir,
     dt.write(spark.createDataFrame([(777777, "FSEG")],
                                    "ck2 bigint, seg string"), mode="append")
 
-    orig = mv._change_window
+    orig = datasource.change_window
 
     def flaky(spark_, src, last, cur):
         # dim window unreadable; fact window fine
@@ -992,11 +993,11 @@ def test_join_mv_unreadable_window_full_fallback(sess, spark, sf_dir,
             return None
         return orig(spark_, src, last, cur)
 
-    mv._change_window = flaky
+    datasource.change_window = flaky
     try:
         assert mv.update_material_view(sess, "mv_j") is True
     finally:
-        mv._change_window = orig
+        datasource.change_window = orig
     assert sess.table("mv_j").store.snapshot().commit_type == "write"
     assert _join_view(sess) == _join_full(sess)
     # next fact-only window is incremental again
@@ -1425,12 +1426,12 @@ def test_join_full_fallback_stamps_all_sources(spark, sf_dir, tmp_path):
                           .cast("decimal(18,2)")))
     dt.write(spark.createDataFrame([(888888, "ZZ")],
                                    "ck2 bigint, seg string"), mode="append")
-    _orig_cw = mv._change_window
-    mv._change_window = lambda *a, **k: None
+    _orig_cw = datasource.change_window
+    datasource.change_window = lambda *a, **k: None
     try:
         assert mv.update_material_view(sess, "mv_j") is True
     finally:
-        mv._change_window = _orig_cw
+        datasource.change_window = _orig_cw
     assert sess.table("mv_j").store.snapshot().commit_type == "write"
 
     reg = mv._load_registry(sess.warehouse)

@@ -1,5 +1,5 @@
 """Round-11 optimization: MV refresh intermediates ride a capped
-driver collect + Arrow-local relation (mv._mat_touched) instead of
+driver collect + Arrow-local relation (local.mat_local) instead of
 localCheckpoint, so dead-group/threat probes are answered from driver
 rows with no Spark jobs. These tests pin that the fast path and the
 over-cap fallback (STARLAKE_MV_LOCAL_ROW_CAP=0 forces localCheckpoint)

@@ -522,6 +522,91 @@ def test_realtime_read_full_fallbacks(spark, events, tmp_path):
     assert got.agg(F.sum("n_rows")).collect()[0][0] == 100
 
 
+def _want_sum_state(df):
+    """(bucket, event_type, value_sum, n_rows) of an hourly sum rollup,
+    recomputed from the source rows ``df`` with plain Spark."""
+    return {(str(r.bucket_ts), r.event_type, str(r.value_sum), r.n_rows)
+            for r in df.groupBy(F.date_trunc("hour", "ts")
+                                .alias("bucket_ts"), "event_type")
+            .agg(F.sum(F.col("value").cast("decimal(28,6)"))
+                 .alias("value_sum"),
+                 F.count(F.lit(1)).alias("n_rows")).collect()}
+
+
+def _live_sum_state(df):
+    return {(str(r.bucket_ts), r.event_type, str(r.value_sum), r.n_rows)
+            for r in df.select("bucket_ts", "event_type", "value_sum",
+                               "n_rows").collect()}
+
+
+@pytest.mark.parametrize("hashed", [False, True],
+                         ids=["append_only", "hash"])
+def test_expired_cursor_version_rebuilds_in_full(spark, events, tmp_path,
+                                                 hashed):
+    """Manifest log retention ages out the source version at the
+    rollup's cursor: the window can no longer be resolved, so the
+    real-time read serves a full recompute and the refresh rebuilds in
+    full (as an MV refresh does) instead of failing."""
+    from starlake_spark.meta import MetaError
+
+    rows = events.limit(600)
+    kw = ({"hash_partitions": ["event_id"], "hash_bucket_num": 2}
+          if hashed else {})
+    src_path = str(tmp_path / "src")
+    src = create_table(spark, rows.filter(F.col("event_id") % 4 == 0),
+                       src_path,
+                       configuration={"meta.checkpoint.interval": "2"},
+                       **kw)
+    t = R.create_rollup(spark, src_path, str(tmp_path / "ru"),
+                        time_col="ts", group_cols=["event_type"],
+                        aggs={"value": "sum"}, hash_bucket_num=2)
+    cursor = int(t.info.configuration["rollup.last_version"])
+    for i in range(1, 4):
+        part = rows.filter(F.col("event_id") % 4 == i)
+        if hashed:
+            src.upsert(part)
+        else:
+            src.write(part, mode="append")
+    src.store.expire_manifests(retention_s=0.0)
+    with pytest.raises(MetaError):
+        src.store.snapshot(cursor)
+    want = _want_sum_state(src.to_df())
+    assert _live_sum_state(R.read_rollup_realtime(spark, t)) == want
+    res = R.refresh_rollup(spark, t)
+    assert res["mode"] == "full", res
+    assert _live_sum_state(R.read_rollup(spark, t)) == want
+    assert R.refresh_rollup(spark, t)["mode"] == "noop"
+
+
+def test_empty_append_is_noop_and_advances_cursor(spark, events, tmp_path):
+    """An empty append commits a version with no new data files: the
+    refresh is a noop that still moves the cursor past it, and the next
+    real append folds incrementally."""
+    rows = events.limit(600)
+    src_path = str(tmp_path / "src")
+    src = create_table(spark, rows.filter(F.col("event_id") % 2 == 0),
+                       src_path)
+    t = R.create_rollup(spark, src_path, str(tmp_path / "ru"),
+                        time_col="ts", group_cols=["event_type"],
+                        aggs={"value": "sum"}, hash_bucket_num=2)
+    cursor = int(t.info.configuration["rollup.last_version"])
+    src.write(rows.limit(0), mode="append")
+    empty_v = src.store.latest_version()
+    assert empty_v > cursor
+    before = _live_sum_state(R.read_rollup(spark, t))
+    assert _live_sum_state(R.read_rollup_realtime(spark, t)) == before
+    res = R.refresh_rollup(spark, t)
+    assert res == {"mode": "noop", "from": cursor, "to": empty_v}, res
+    assert int(t.info.configuration["rollup.last_version"]) == empty_v
+    assert _live_sum_state(R.read_rollup(spark, t)) == before
+
+    src.write(rows.filter(F.col("event_id") % 2 == 1), mode="append")
+    res = R.refresh_rollup(spark, t)
+    assert res["mode"] == "incremental", res
+    assert res["from"] == empty_v
+    assert _live_sum_state(R.read_rollup(spark, t)) == _want_sum_state(rows)
+
+
 # ---------------------------------------------------------------------------
 # round 10: rollup-serving query rewrite
 # ---------------------------------------------------------------------------
