@@ -20,7 +20,7 @@ from starlake_spark import merge_ops as mo
 from starlake_spark.local import local_df
 from starlake_spark.meta import (DataFileInfo, ManifestStore, TableInfo,
                                  decode_range_value)
-from starlake_spark.operators import reader, writer
+from starlake_spark.operators import predicate as P, reader, writer
 
 # reference defaults (StarLakeSQLConf.scala:41-58)
 DELTA_FILE_COMPACT_TRIGGER = 5
@@ -1254,7 +1254,7 @@ def _compact_once(spark: SparkSession, store: ManifestStore, force: bool = True,
     pred_keep: set | None = None
     if partition_predicate is not None:
         matched = reader._prune_partitions_sql(
-            spark, info, list(snap.partitions), partition_predicate)
+            spark, info, list(snap.partitions), P.parse(partition_predicate))
         from starlake_spark.meta import encode_range_value
         pred_keep = {encode_range_value(info.range_cols,
                                         [m.get(c) for c in info.range_cols])

@@ -41,15 +41,20 @@ keeps that fraction small; the reference relies on the same discipline
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import functools
 import json
 import logging
 import os
 import re
 from collections import defaultdict
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from starlake_spark import merge_ops as mo
+from starlake_spark.operators import predicate as P
 from starlake_spark.local import local_df
 from starlake_spark.meta import (
     DataFileInfo,
@@ -70,6 +75,19 @@ TOMBSTONE_COL = "_star_tombstone"
 
 def _schema(info: TableInfo) -> T.StructType:
     return T.StructType.fromJson(json.loads(info.schema_json))
+
+
+@functools.lru_cache(maxsize=64)
+def _schema_types(schema_json: str) -> MappingProxyType:
+    return MappingProxyType({
+        f.name: f.dataType
+        for f in T.StructType.fromJson(json.loads(schema_json)).fields})
+
+
+def _types(info: TableInfo) -> MappingProxyType:
+    """Read-only {column: DataType} of the table schema, parsed once per
+    schema: every pruner of a scan asks for it."""
+    return _schema_types(info.schema_json)
 
 
 def alias_map(info: TableInfo) -> dict[str, list[str]]:
@@ -788,210 +806,95 @@ def _merge_scan(
     return _collapse(u, lambda c: F.col(_ORD + c), any_tomb)
 
 
-def _eval_part_rhs_py(rhs: str, dtype):
-    """Python value of a partition-predicate RHS, or ``_FALLBACK``.
-    Beyond plain literals, evaluates the literal-argument function
-    forms the generated-column translator emits (to_date / year /
-    ISO-prefix substring / date_format) — all prefix/extractions of an
-    ISO literal, so the value falls out of string slicing."""
-    rhs = rhs.strip()
-    v = _parse_lit_py(rhs, dtype)
-    if v is not _FALLBACK:
-        return v
-    m = re.fullmatch(r"to_date\(\s*(?:TIMESTAMP\s*|DATE\s*)?'([^']+)'\s*\)",
-                     rhs, re.IGNORECASE)
-    if m and isinstance(dtype, T.DateType):
-        return m.group(1)[:10]
-    m = re.fullmatch(r"year\(\s*(?:TIMESTAMP\s*|DATE\s*)?'(\d{4})[^']*'\s*\)",
-                     rhs, re.IGNORECASE)
-    if m and isinstance(dtype, (T.ShortType, T.IntegerType, T.LongType)):
-        return int(m.group(1))
-    m = re.fullmatch(
-        r"substring\(\s*CAST\(\s*(?:TIMESTAMP\s*|DATE\s*)?'([^']+)'\s+AS\s+"
-        r"STRING\s*\)\s*,\s*1\s*,\s*(\d+)\s*\)", rhs, re.IGNORECASE)
-    if m and isinstance(dtype, T.StringType):
-        return m.group(1)[:int(m.group(2))]
-    m = re.fullmatch(
-        r"date_format\(\s*(?:TIMESTAMP\s*|DATE\s*)?'([^']+)'\s*,\s*"
-        r"'(yyyy(?:-MM(?:-dd(?: HH)?)?)?)'\s*\)", rhs, re.IGNORECASE)
-    if m and isinstance(dtype, T.StringType):
-        return m.group(1)[:len(m.group(2))]
-    return _FALLBACK
-
-
 def _try_prune_partitions_python(info, rows: list[dict],
-                                 predicate: str) -> list[dict] | None:
+                                 pred: P.Pred) -> list[dict] | None:
     """Pure-Python partition-predicate evaluation, or None to use the
     Spark path. UNLIKE stats skipping this result is exactness-
     critical (replaceWhere expires exactly the matching partitions),
-    so the ENTIRE predicate must decompose into supported AND-ed
-    conjuncts — any OR / NOT / unknown form / unparseable literal
-    bails instead of approximating."""
-    types = {f.name: f.dataType for f in _schema(info).fields}
-    checks = []
-    for c in _split_top_and(predicate):
-        # the generated-column translator emits backtick-quoted
-        # identifiers; unquote simple ones so the conjunct regexes match
-        c = re.sub(r"`(\w+)`", r"\1", c).strip()
-        while c.startswith("(") and c.endswith(")"):
-            inner = c[1:-1]
-            if _split_top_and(inner) == [inner.strip()]:
-                c = inner.strip()
-            else:
-                break
-        if re.search(r"\bOR\b", c, re.IGNORECASE):
-            return None
-        mnull = _IS_NULL_RE.match(c)
-        if mnull:
-            col, neg = mnull.group(1), bool(mnull.group(2))
-            if col not in info.range_cols:
-                return None
-            checks.append(("null", col, neg))
-            continue
-        mi = _IN_LIST_RE.match(c)
-        if mi:
-            col, body = mi.group(1), mi.group(2)
-            if col not in info.range_cols or col not in types:
-                return None
-            vals = [_eval_part_rhs_py(x, types[col])
-                    for x in body.split(",") if x.strip()]
-            if not vals or any(v is _FALLBACK for v in vals):
-                return None
-            checks.append(("in", col, set(map(str, vals))
-                           if isinstance(types[col], T.DateType)
-                           else set(vals)))
-            continue
-        m = _CONJ_CMP_RE.match(c)
-        if not m:
-            return None
-        col, op, rhs = m.group(1), m.group(2), m.group(3)
-        if col not in info.range_cols or col not in types:
-            return None
-        v = _eval_part_rhs_py(rhs, types[col])
-        if v is _FALLBACK:
-            return None
-        checks.append(("cmp", col, (op, v)))
-
-    def _coerce(col, raw):
-        dt = types[col]
-        if raw is None:
-            return None
-        if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            return int(raw) if re.fullmatch(r"[+-]?\d+", raw) else _FALLBACK
-        if isinstance(dt, (T.FloatType, T.DoubleType)):
-            try:
-                return float(raw)
-            except ValueError:
-                return _FALLBACK
-        if isinstance(dt, T.DateType):
-            return raw if re.fullmatch(r"\d{4}-\d{2}-\d{2}", raw) else _FALLBACK
-        if isinstance(dt, T.StringType):
-            return raw if raw.isascii() else _FALLBACK
-        return _FALLBACK
-
-    out = []
-    for r in rows:
-        keep = True
-        for kind, col, payload in checks:
-            val = _coerce(col, r.get(col))
-            if val is _FALLBACK:
-                return None
-            if kind == "null":
-                if (val is None) == payload:  # payload=True means NOT NULL
-                    keep = False
-                    break
-                continue
-            if val is None:
-                keep = False  # SQL: comparison/IN with NULL is never true
-                break
-            if kind == "in":
-                if val not in payload:
-                    keep = False
-                    break
-                continue
-            op, v = payload
-            try:
-                ok = (val == v if op in ("=", "==") else
-                      val > v if op == ">" else val >= v if op == ">=" else
-                      val < v if op == "<" else val <= v)
-            except TypeError:
-                return None
-            if not ok:
-                keep = False
-                break
-        if keep:
-            out.append(r)
-    return out
+    so the WHOLE predicate must be atoms on range columns whose
+    literals have an exact value — a left-over conjunct (OR, NOT,
+    function call, ...) bails instead of approximating."""
+    if not pred.complete or any(a.col not in info.range_cols
+                                for a in pred.atoms):
+        return None
+    match = P.partition_matcher(pred.atoms, _types(info))
+    return None if match is None else [r for r in rows if match(r)]
 
 
-def _prune_partitions_sql(spark, info, range_values: list[str], predicate: str) -> list[dict]:
-    """Evaluate a SQL predicate over the partition values (as a tiny
-    DataFrame, cast to the table's range-column types) and return the
-    decoded dicts of matching partitions. The Python fast path above
-    answers first when the whole predicate is exactly evaluable
-    in-process — partition pruning then costs zero Spark jobs."""
+def _prune_partitions_sql(spark, info, range_values: list[str],
+                          pred: P.Pred) -> list[dict]:
+    """Evaluate a parsed predicate over the partition values (as a tiny
+    DataFrame, cast to the table's range-column types, filtered by the
+    SQL the atoms render) and return the decoded dicts of matching
+    partitions. The Python fast path above answers first when the whole
+    predicate is exactly evaluable in-process — partition pruning then
+    costs zero Spark jobs."""
     range_cols = info.range_cols
-    schema = _schema(info)
-    types = {f.name: f.dataType for f in schema.fields}
+    types = _types(info)
     rows = [decode_range_value(rv) for rv in range_values]
     if not rows:
         return []
-    fast = _try_prune_partitions_python(info, rows, predicate)
+    fast = _try_prune_partitions_python(info, rows, pred)
     if fast is not None:
         return fast
+    # rows come back by index: str() of a cast value is not the
+    # directory string for booleans ('True') or decimals ('10.50')
     pdf = local_df(spark,
-        [[r.get(c) for c in range_cols] for r in rows],
-        T.StructType([T.StructField(c, T.StringType()) for c in range_cols]),
+        [[i] + [r.get(c) for c in range_cols] for i, r in enumerate(rows)],
+        T.StructType([T.StructField("_star_idx", T.IntegerType())]
+                     + [T.StructField(c, T.StringType()) for c in range_cols]),
     )
     for c in range_cols:
         pdf = pdf.withColumn(c, F.col(c).cast(types.get(c, T.StringType())))
-    kept = pdf.filter(F.expr(predicate)).collect()
-    keep_keys = {tuple(str(r[c]) for c in range_cols) for r in kept}
-    return [r for r in rows if tuple(str(r.get(c)) for c in range_cols) in keep_keys]
+    keep = {r[0] for r in pdf.filter(F.expr(pred.sql()))
+            .select("_star_idx").collect()}
+    return [r for i, r in enumerate(rows) if i in keep]
 
 
 def _generated_translator(gexpr: str):
-    """(source_col, λ literal → partition-side SQL) for a MONOTONE
-    generated-column expression, else None. Every supported form is a
+    """(source_col, fold: Lit → Lit | None) for a MONOTONE generated-
+    column expression, else None. Every supported form is a
     floor/prefix function of its input, so ``src >= L`` implies
     ``g >= f(L)`` — Delta's generated-column partition-pruning rule
     across the common time-partitioning layouts. date_format patterns
     qualify only when chronological prefixes of ISO order (yyyy,
     yyyy-MM, ...); month()/day() alone are cyclic, NOT monotone, and
-    deliberately absent."""
-    m = re.fullmatch(r"\s*to_date\(\s*([A-Za-z_]\w*)\s*\)\s*", gexpr, re.IGNORECASE)
-    if m:
-        return m.group(1), lambda l: f"to_date({l})"
-    m = re.fullmatch(r"\s*cast\(\s*([A-Za-z_]\w*)\s+as\s+date\s*\)\s*",
+    deliberately absent. ``P.fold`` computes f(L) the way Spark would."""
+    def lit(v):
+        return P.Lit("number", str(v), v) if isinstance(v, int) \
+            else P.Lit("string", f"'{v}'", v)
+
+    m = re.fullmatch(r"\s*(?:to_date\(\s*([A-Za-z_]\w*)\s*\)|"
+                     r"cast\(\s*([A-Za-z_]\w*)\s+as\s+date\s*\))\s*",
                      gexpr, re.IGNORECASE)
     if m:
-        return m.group(1), lambda l: f"to_date({l})"
+        return m.group(1) or m.group(2), lambda l: P.fold("to_date", [l])
     m = re.fullmatch(r"\s*date_trunc\(\s*'(\w+)'\s*,\s*([A-Za-z_]\w*)\s*\)\s*",
                      gexpr, re.IGNORECASE)
-    if m and m.group(1).upper() in (
-            "YEAR", "QUARTER", "MONTH", "WEEK", "DAY", "HOUR", "MINUTE", "SECOND"):
-        unit = m.group(1)
-        return m.group(2), lambda l, u=unit: f"date_trunc('{u}', {l})"
+    if m:
+        return m.group(2), lambda l, u=lit(m.group(1)): P.fold("date_trunc", [u, l])
     m = re.fullmatch(r"\s*year\(\s*([A-Za-z_]\w*)\s*\)\s*", gexpr, re.IGNORECASE)
     if m:
-        return m.group(1), lambda l: f"year({l})"
+        return m.group(1), lambda l: P.fold("year", [l])
     m = re.fullmatch(r"\s*substr(?:ing)?\(\s*([A-Za-z_]\w*)\s*,\s*1\s*,\s*(\d+)\s*\)\s*",
                      gexpr, re.IGNORECASE)
     if m:
-        n = int(m.group(2))
-        return m.group(1), lambda l, n=n: f"substring(CAST({l} AS STRING), 1, {n})"
+        n = lit(int(m.group(2)))
+        return m.group(1), lambda l, n=n: P.fold("substring", [l, lit(1), n])
     m = re.fullmatch(
         r"\s*date_format\(\s*([A-Za-z_]\w*)\s*,\s*"
         r"'(yyyy(?:-MM(?:-dd(?: HH)?)?)?)'\s*\)\s*", gexpr, re.IGNORECASE)
     if m:
-        fmt = m.group(2)
-        return m.group(1), lambda l, f_=fmt: f"date_format({l}, '{f_}')"
+        return m.group(1), lambda l, f=lit(m.group(2)): P.fold("date_format", [l, f])
     return None
 
 
-def _generated_conjuncts(info, where_conjs: list[str]) -> list[str]:
-    """Translate predicates on a generated column's SOURCE into
-    partition conjuncts on the generated column: with day = to_date(ts)
+_WIDEN = {"<": "<=", "<=": "<=", ">": ">=", ">=": ">=", "=": "="}
+
+
+def _generated_conjuncts(info, atoms) -> list[P.Atom]:
+    """Translate comparisons on a generated column's SOURCE into
+    partition atoms on the generated column: with day = to_date(ts)
     (or date_trunc / year / ISO-prefix substring / date_format — every
     monotone form _generated_translator knows), ``ts >= L`` implies
     ``day >= f(L)`` — so queries that only mention ts still prune
@@ -999,41 +902,20 @@ def _generated_conjuncts(info, where_conjs: list[str]) -> list[str]:
     comparisons widen to the containing bucket (safe: pruning keeps a
     superset, rows re-filter later)."""
     out = []
-    gen = {k[len("generated."):]: v
-           for k, v in (info.configuration or {}).items()
-           if k.startswith("generated.")}
-    for gcol, gexpr in gen.items():
-        if gcol not in info.range_cols:
-            continue
-        tr = _generated_translator(gexpr)
+    for k, gexpr in (info.configuration or {}).items():
+        gcol = k[len("generated."):]
+        tr = (_generated_translator(gexpr)
+              if k.startswith("generated.") and gcol in info.range_cols
+              else None)
         if tr is None:
             continue  # non-monotone / unrecognized: no translation
-        src, fn = tr
-        for c in where_conjs:
-            mc = _CONJ_CMP_RE.match(c)
-            if not mc or mc.group(1) != src:
-                continue
-            lit = mc.group(3).strip()
-            if _IDENT_RE.search(lit) and not re.match(
-                    r"^\s*(DATE|TIMESTAMP)\b", lit, re.IGNORECASE):
-                continue
-            op = {"<": "<=", "<=": "<=", ">": ">=", ">=": ">=",
-                  "=": "=", "==": "="}[mc.group(2)]
-            out.append(f"`{gcol}` {op} {fn(lit)}")
+        src, fold = tr
+        for a in atoms:
+            if a.kind == "cmp" and a.col == src and a.op in _WIDEN:
+                lit = fold(a.lits[0])
+                if lit is not None:
+                    out.append(P.Atom("cmp", gcol, _WIDEN[a.op], (lit,)))
     return out
-
-
-_IN_LIST_RE = re.compile(
-    r"^\s*([A-Za-z_][A-Za-z_0-9]*)\s+IN\s*\(([^()]*)\)\s*$", re.IGNORECASE)
-_IS_NULL_RE = re.compile(
-    r"^\s*([A-Za-z_][A-Za-z_0-9]*)\s+IS\s+(NOT\s+)?NULL\s*$", re.IGNORECASE)
-_CONJ_CMP_RE = re.compile(
-    r"^\s*([A-Za-z_][A-Za-z_0-9]*)\s*(<=|>=|==|=|<|>)\s*([^<>=]+?)\s*$")
-# c LIKE 'prefix%' with a pure literal prefix (no wildcards/escapes/
-# quotes inside): prunable as the string range [prefix, prefix+1)
-_LIKE_PREFIX_RE = re.compile(
-    r"^\s*([A-Za-z_][A-Za-z_0-9]*)\s+LIKE\s+'([^'%_\\]+)%'\s*$", re.IGNORECASE)
-_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
 
 
 def _like_prefix_upper(prefix: str) -> str | None:
@@ -1125,60 +1007,29 @@ def _spark_hash_py(values: list, dtypes: list) -> int | None:
     return h - (1 << 32) if h >= (1 << 31) else h
 
 
-def _parse_bucket_lit(lit: str, dtype):
-    """Literal → python value for _spark_hash_py; _FALLBACK when the
-    (literal, type) pair needs Spark's cast semantics."""
-    lit = lit.strip()
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        if re.fullmatch(r"[+-]?\d+", lit):
-            return int(lit)
-        if lit.startswith("'") and lit.endswith("'") \
-                and re.fullmatch(r"[+-]?\d+", lit[1:-1]):
-            return int(lit[1:-1])  # CAST('5' AS INT)
-        return _FALLBACK
-    if isinstance(dtype, T.StringType):
-        if lit.startswith("'") and lit.endswith("'"):
-            return lit[1:-1].replace("''", "'")
-        return _FALLBACK
-    return _FALLBACK
-
-
-def _buckets_for_lookup(spark, info: TableInfo,
-                        conjuncts: list[str]) -> set[int] | None:
+def _buckets_for_lookup(spark, info: TableInfo, atoms) -> set[int] | None:
     """Bucket ids when EVERY hash column is pinned to literal(s) —
     the reference's bucket pruning (ParquetScanSuite point lookups),
     extended to IN-lists: the writer places a key's rows in bucket
     pmod(hash(keys), n) via repartition's HashPartitioning, so a point
     lookup needs exactly one bucket's files per partition and a
-    ``k IN (a, b, c)`` lookup at most three. Buckets are computed by
-    Spark itself over the SAME murmur3 hash() the shuffle used, with
-    literals cast to the declared column types (hash(5) != hash(5L) —
-    the cast is load-bearing). Returns None (no pruning) when any hash
-    column is unpinned or the value-combination count exceeds
+    ``k IN (a, b, c)`` lookup at most three. Buckets hash the SAME
+    murmur3 hash() the shuffle used, with literals cast to the declared
+    column types (hash(5) != hash(5L), and '5' on a bigint key is 5 —
+    the cast is load-bearing): in-process where ``P.value`` gives the
+    cast value, else by Spark itself. Returns None (no pruning) when
+    any hash column is unpinned or the value-combination count exceeds
     ``_MAX_LOOKUP_COMBOS`` (a wide IN-list reads most buckets anyway).
     """
     if info.bucket_num <= 0 or not info.hash_cols:
         return None
-    schema_types = {f.name: f.dataType for f in _schema(info).fields}
-
-    def _is_literal(x: str) -> bool:
-        return not _IDENT_RE.search(x) or bool(re.match(
-            r"^\s*(DATE|TIMESTAMP|TRUE|FALSE)\b", x, re.IGNORECASE))
-
-    lits: dict[str, list[str]] = {}
-    for c in conjuncts:
-        m = _CONJ_CMP_RE.match(c)
-        if m:
-            col, op, lit = m.group(1), m.group(2), m.group(3)
-            if op in ("=", "==") and col in info.hash_cols and _is_literal(lit):
-                lits[col] = [lit]
-            continue
-        mi = _IN_LIST_RE.match(c)
-        if mi and mi.group(1) in info.hash_cols:
-            items = [x.strip() for x in mi.group(2).split(",") if x.strip()]
-            if items and all(_is_literal(x) for x in items):
-                # equality beats IN when both pin the column (narrower)
-                lits.setdefault(mi.group(1), items)
+    lits: dict[str, tuple] = {}
+    for a in atoms:
+        if a.col in info.hash_cols and a.op == "=":
+            lits[a.col] = a.lits
+        elif a.col in info.hash_cols and a.kind == "in":
+            # equality beats IN when both pin the column (narrower)
+            lits.setdefault(a.col, a.lits)
     if set(lits) != set(info.hash_cols):
         return None
     n_combos = 1
@@ -1189,29 +1040,23 @@ def _buckets_for_lookup(spark, info: TableInfo,
     import itertools
 
     combos = list(itertools.product(*[lits[c] for c in info.hash_cols]))
-    dtypes = [schema_types[c] for c in info.hash_cols]
+    types = _types(info)
+    dtypes = [types[c] for c in info.hash_cols]
 
     # fast path: compute the writer's murmur3 in-process (bit-exact
     # twin, differentially pinned) — probe planning then needs no JVM
     # round trip at all
-    parsed = [[_parse_bucket_lit(lit, dt) for lit, dt in zip(combo, dtypes)]
+    parsed = [[P.value(lit, dt) for lit, dt in zip(combo, dtypes)]
               for combo in combos]
-    if all(v is not _FALLBACK for vals in parsed for v in vals):
-        out = set()
-        ok = True
-        for vals in parsed:
-            h = _spark_hash_py(vals, dtypes)
-            if h is None:
-                ok = False
-                break
-            out.add(h % info.bucket_num)
-        if ok:
-            return out or None
+    if all(v is not P.FALLBACK for vals in parsed for v in vals):
+        hashes = [_spark_hash_py(vals, dtypes) for vals in parsed]
+        if None not in hashes:
+            return {h % info.bucket_num for h in hashes} or None
 
     selects = []
     for combo in combos:
         args = ", ".join(
-            f"CAST({lit} AS {schema_types[c].simpleString()})"
+            f"CAST({lit.text} AS {types[c].simpleString()})"
             for c, lit in zip(info.hash_cols, combo))
         selects.append(f"SELECT pmod(hash({args}), {info.bucket_num}) AS b")
     rows = spark.sql(" UNION ALL ".join(selects)).collect()
@@ -1219,312 +1064,124 @@ def _buckets_for_lookup(spark, info: TableInfo,
     return out or None
 
 
-def _split_top_and(pred: str) -> list[str]:
-    """Split on AND at paren depth 0, respecting single-quoted strings."""
-    parts, buf, depth, i, n = [], [], 0, 0, len(pred)
-    while i < n:
-        ch = pred[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and pred[j] != "'":
-                j += 1
-            buf.append(pred[i:j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0 and re.match(r"\bAND\b", pred[i:i + 4], re.IGNORECASE) \
-                and (i == 0 or not pred[i - 1].isalnum()):
-            parts.append("".join(buf))
-            buf = []
-            i += 3
-            continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
+# per comparison op: the file-bound tests its literal must pass,
+# (bound, op) — a file can hold `col > v` only if its max > v
+_BOUND_TESTS = {"=": (("max", ">="), ("min", "<=")), ">": (("max", ">"),),
+                ">=": (("max", ">="),), "<": (("min", "<"),),
+                "<=": (("min", "<="),)}
 
 
-_LITERAL = r"(?:'[^']*'|[^\s()']+)"
-
-
-def _conjuncts(pred: str) -> list[str]:
-    """Top-level AND-split of a predicate for pruning purposes.
-    Conjuncts the analyzer can't handle (ORs, function calls, NOT, …)
-    are simply dropped from the skipping decision — correctness never
-    depends on this: skipping uses a SUBSET of the conjuncts and the
-    full predicate is always re-applied row-level. BETWEEN normalizes
-    to a comparison pair first (so its inner AND doesn't split it)."""
-    pred = re.sub(
-        rf"\b([A-Za-z_]\w*)\s+BETWEEN\s+({_LITERAL})\s+AND\s+({_LITERAL})",
-        r"\1 >= \2 AND \1 <= \3", pred, flags=re.IGNORECASE)
-    # A depth-0 OR makes the ROOT a disjunction (AND binds tighter), so
-    # AND-splitting would promote an OR-arm's local conjunct to a global
-    # one and prune rows the other arm keeps — a row-loss bug, caught by
-    # test_skipping_property. The whole predicate is then analyzable
-    # only as a single-column OR-of-equalities (→ IN); anything else
-    # contributes nothing to skipping.
-    if _has_top_level_or(pred):
-        whole = _or_equalities_to_in(pred)
-        return [whole] if whole is not None else []
-    out = []
-    for c in _split_top_and(pred):
-        if re.search(r"\bOR\b", c, re.IGNORECASE):
-            # single-column OR-of-equalities is just an IN list —
-            # normalize so the IN pruners (stats, partition, bucket)
-            # all fire; any other OR stays unanalyzable (dropped)
-            as_in = _or_equalities_to_in(c)
-            if as_in is not None:
-                out.append(as_in)
-            continue
-        # NOT is unanalyzable except the IS NOT NULL form, which the
-        # null-count skipper understands
-        if re.search(r"\bNOT\b", c, re.IGNORECASE) and not _IS_NULL_RE.match(c):
-            continue
-        out.append(c)
-    return out
-
-
-def _has_top_level_or(pred: str) -> bool:
-    """True iff an OR token occurs at paren depth 0 outside quotes."""
-    depth, i, n = 0, 0, len(pred)
-    while i < n:
-        ch = pred[i]
-        if ch == "'":
-            j = i + 1
-            while j < n and pred[j] != "'":
-                j += 1
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (depth == 0 and pred[i:i + 2].upper() == "OR"
-                and (i == 0 or not (pred[i - 1].isalnum() or pred[i - 1] == "_"))
-                and (i + 2 >= n or not (pred[i + 2].isalnum() or pred[i + 2] == "_"))):
-            return True
-        i += 1
-    return False
-
-
-def _or_equalities_to_in(c: str) -> str | None:
-    """``a = 1 OR a = 2`` (optionally parenthesized, = or IN arms) →
-    ``a IN (1, 2)`` when every top-level OR arm pins the SAME column;
-    None otherwise."""
-    s = c.strip()
-    while s.startswith("(") and s.endswith(")"):
-        inner = s[1:-1].strip()
-        # only strip when the parens wrap the WHOLE expression
-        depth = 0
-        ok = True
-        for ch in inner:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    ok = False
-                    break
-        if not ok or depth != 0:
-            break
-        s = inner
-    arms = re.split(r"\bOR\b", s, flags=re.IGNORECASE)
-    if len(arms) < 2 or any(re.search(r"[()]", a) for a in arms):
-        return None
-    if any(a.count("'") % 2 for a in arms):
-        return None  # the split cut through a quoted literal
-    col = None
-    vals: list[str] = []
-    for a in arms:
-        m = _CONJ_CMP_RE.match(a)
-        if not m or m.group(2) not in ("=", "=="):
-            mi = _IN_LIST_RE.match(a)
-            if mi is None:
-                return None
-            acol, items = mi.group(1), [
-                x.strip() for x in mi.group(2).split(",") if x.strip()]
-        else:
-            acol, items = m.group(1), [m.group(3)]
-        if col is None:
-            col = acol
-        elif acol != col:
-            return None
-        vals.extend(items)
-    if col is None or not vals:
-        return None
-    return f"{col} IN ({', '.join(vals)})"
-
-
-_FALLBACK = object()  # sentinel: python literal parse refused, use Spark
-
-
-def _parse_lit_py(lit: str, dtype) -> object:
-    """Parse a SQL literal for pure-Python stats comparison, or
-    ``_FALLBACK`` when Python comparison can't be trusted to match
-    Spark's coercion for this (literal, type) pair. Deliberately
-    narrow: integers/floats for numeric columns, ASCII strings,
-    ISO dates and space-separated ISO timestamps (the exact format
-    ``_json_safe_stat`` writes, where lexicographic == chronologic)."""
-    lit = lit.strip()
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                          T.FloatType, T.DoubleType)):
-        if re.fullmatch(r"[+-]?\d+", lit):
-            return int(lit)
-        if re.fullmatch(r"[+-]?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?", lit):
-            return float(lit)
-        return _FALLBACK
-    if isinstance(dtype, T.StringType):
-        if lit.startswith("'") and lit.endswith("'"):
-            v = lit[1:-1].replace("''", "'")
-            return v if v.isascii() else _FALLBACK
-        return _FALLBACK
-    if isinstance(dtype, T.DateType):
-        m = re.fullmatch(r"(?:DATE\s*)?'(\d{4}-\d{2}-\d{2})'", lit,
-                         re.IGNORECASE)
-        return m.group(1) if m else _FALLBACK
-    if isinstance(dtype, T.TimestampType):
-        m = re.fullmatch(
-            r"(?:TIMESTAMP\s*)?'(\d{4}-\d{2}-\d{2})"
-            r"(?:[ T](\d{2}:\d{2}:\d{2}(?:\.\d+)?))?'", lit, re.IGNORECASE)
-        if not m:
-            return _FALLBACK
-        return f"{m.group(1)} {m.group(2) or '00:00:00'}"
-    return _FALLBACK
+def _stat_value(lit: P.Lit, dtype):
+    """A literal in the manifest's stat encoding (writer._json_safe_stat:
+    numbers, ASCII strings, ISO dates and 'date time' strings, where
+    lexicographic == chronologic), or ``FALLBACK`` when a Python
+    comparison can't be trusted to match Spark's coercion (decimals,
+    booleans, non-ASCII strings)."""
+    v = P.value(lit, dtype)
+    if isinstance(v, datetime.datetime):
+        return v.isoformat(sep=" ")
+    if isinstance(v, datetime.date):
+        return v.isoformat()
+    if isinstance(v, (bool, decimal.Decimal)) or (
+            isinstance(v, str) and not v.isascii()):
+        return P.FALLBACK
+    return v
 
 
 def _stat_ok_py(v, dtype) -> bool:
     """Is this manifest stat value comparable in Python against a
-    ``_parse_lit_py`` literal of the same column type?"""
+    ``_stat_value`` literal of the same column type?"""
     if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                           T.FloatType, T.DoubleType)):
         return isinstance(v, (int, float)) and not isinstance(v, bool)
     if isinstance(dtype, T.StringType):
         return isinstance(v, str) and v.isascii()
-    if isinstance(dtype, (T.DateType, T.TimestampType)):
+    if isinstance(dtype, (T.DateType, T.TimestampType, T.TimestampNTZType)):
         return isinstance(v, str) and "+" not in v
     return False
 
 
-def _try_prune_python(info, files, conjuncts, allowed_cols):
+def _stats_tests(info, atoms, allowed_cols) -> list[tuple]:
+    """What footer stats can decide of ``atoms`` (already ``prunable``):
+    per atom ``(col, kind, tests)``. kind "null" / "notnull" reads the
+    null count; kind "bounds" carries ``(bound, op, value, sql)`` tests
+    that a file's min / max must pass for the atom to possibly hold —
+    ``value`` the stat-encoded literal (``FALLBACK`` without one) for
+    the Python path, ``sql`` its text for the Spark path."""
+    types = _types(info)
+    out = []
+    for a in atoms:
+        if a.col not in allowed_cols or a.op == "!=":
+            continue
+        if a.kind == "null":
+            out.append((a.col, a.op, ()))
+        elif a.kind == "like":
+            # matches live in [prefix, upper): overlap test against the
+            # file's [min, max] (string stats compare in code-point
+            # order == UTF-8 byte order)
+            prefix = a.lits[0].value[:-1]
+            upper = _like_prefix_upper(prefix)
+            if upper is not None:
+                out.append((a.col, "bounds", (
+                    ("max", ">=", prefix, _sql_str(prefix)),
+                    ("min", "<", upper, _sql_str(upper)))))
+        elif a.kind == "in":
+            # range check against the list's envelope: a file whose
+            # [min,max] misses [least,greatest] can't hold any member
+            vals = [_stat_value(l, types[a.col]) for l in a.lits]
+            sql = ", ".join(l.text for l in a.lits)
+            lo, hi = ((P.FALLBACK, P.FALLBACK)
+                      if any(v is P.FALLBACK for v in vals)
+                      else (min(vals), max(vals)))
+            out.append((a.col, "bounds", (
+                ("max", ">=", lo, f"least({sql})"),
+                ("min", "<=", hi, f"greatest({sql})"))))
+        else:
+            v = _stat_value(a.lits[0], types[a.col])
+            out.append((a.col, "bounds", tuple(
+                (b, op, v, a.lits[0].text) for b, op in _BOUND_TESTS[a.op])))
+    return out
+
+
+def _try_prune_python(info, files, atoms, allowed_cols):
     """Pure-Python evaluation of the stats-skipping decision — the
-    hot-path twin of the Spark evaluation below, for the literal
-    shapes ``_parse_lit_py`` accepts. Returns None when ANY analyzable
-    conjunct involves a type/literal outside that envelope (decimals,
-    booleans, non-ASCII strings, exotic formats), in which case the
-    caller runs the Spark-coercion path. Point lookups and time-range
-    scans hit this path, saving a driver-side Spark job PER SCAN —
-    at one scan per CDC window / probed key, those jobs dominate."""
-    schema_types = {f.name: f.dataType for f in _schema(info).fields}
-    checks = []  # (kind, col, payload)
-    for c in conjuncts:
-        mn_ = _IS_NULL_RE.match(c)
-        if mn_:
-            col, neg = mn_.group(1), bool(mn_.group(2))
-            if col in allowed_cols and col in schema_types:
-                checks.append(("notnull" if neg else "isnull", col, None))
-            continue
-        mi = _IN_LIST_RE.match(c)
-        if mi:
-            col, body = mi.group(1), mi.group(2)
-            if col not in allowed_cols or col not in schema_types:
-                continue
-            items = [x.strip() for x in body.split(",") if x.strip()]
-            if not items:
-                continue
-            vals = [_parse_lit_py(x, schema_types[col]) for x in items]
-            if any(v is _FALLBACK for v in vals):
-                return None
-            try:
-                checks.append(("in", col, (min(vals), max(vals))))
-            except TypeError:  # mixed int/str etc — let Spark coerce
-                return None
-            continue
-        ml = _LIKE_PREFIX_RE.match(c)
-        if ml:
-            col, prefix = ml.group(1), ml.group(2)
-            if (col in allowed_cols
-                    and isinstance(schema_types.get(col), T.StringType)
-                    and _like_prefix_upper(prefix) is not None):
-                checks.append(("like", col, prefix))
-            continue
-        m = _CONJ_CMP_RE.match(c)
-        if not m:
-            continue
-        col, op, lit = m.group(1), m.group(2), m.group(3)
-        if col not in allowed_cols or col not in schema_types:
-            continue
-        if _IDENT_RE.search(lit) and not re.match(
-                r"^\s*(DATE|TIMESTAMP|INTERVAL|TRUE|FALSE)\b", lit,
-                re.IGNORECASE):
-            continue  # column-vs-column / function call: not analyzable
-        v = _parse_lit_py(lit, schema_types[col])
-        if v is _FALLBACK:
-            return None
-        checks.append(("cmp", col, (op, v)))
+    hot-path twin of the Spark evaluation below, for the literals
+    ``_stat_value`` encodes. Returns None when ANY analyzable atom
+    has a literal outside that envelope (decimals, booleans,
+    non-ASCII strings, exotic formats), in which case the caller runs
+    the Spark-coercion path. Point lookups and time-range scans hit
+    this path, saving a driver-side Spark job PER SCAN — at one scan
+    per CDC window / probed key, those jobs dominate."""
+    checks = _stats_tests(info, atoms, allowed_cols)
+    if any(t[2] is P.FALLBACK for _, _, tests in checks for t in tests):
+        return None
     if not checks:
         return files
-
+    types = _types(info)
     amap = alias_map(info)
 
     def _keep(f) -> bool:
         st = f.stats or {}
-        for kind, col, payload in checks:
+        for col, kind, tests in checks:
             phys = _resolve_physical(col, st, amap)
             b = ({} if phys is None else st.get(phys)) or {}
-            if kind == "isnull":
-                n = b.get("nulls")
-                if n is not None and n == 0:
+            n = b.get("nulls")
+            if kind == "null":
+                if n == 0:
                     return False
                 continue
             if kind == "notnull":
-                n = b.get("nulls")
-                if n is not None and f.num_rows >= 0 and n >= f.num_rows:
+                if n is not None and 0 <= f.num_rows <= n:
                     return False
                 continue
-            mn, mx = b.get("min"), b.get("max")
-            dtype = schema_types[col]
-            if mn is None or mx is None:
-                continue  # no bounds: file passes this conjunct
-            if not (_stat_ok_py(mn, dtype) and _stat_ok_py(mx, dtype)):
+            if b.get("min") is None or b.get("max") is None:
+                continue  # no bounds: file passes this atom
+            if not (_stat_ok_py(b["min"], types[col])
+                    and _stat_ok_py(b["max"], types[col])):
                 raise _PyPruneBail()
-            if kind == "in":
-                lo, hi = payload
-                try:
-                    if not (mn <= hi and mx >= lo):
-                        return False
-                except TypeError:
-                    raise _PyPruneBail()
-                continue
-            if kind == "like":
-                # matches live in [prefix, upper): overlap test against
-                # the file's [min, max] (string stats compare in code-
-                # point order == UTF-8 byte order)
-                if not isinstance(mn, str) or not isinstance(mx, str):
-                    raise _PyPruneBail()
-                upper = _like_prefix_upper(payload)
-                if not (mx >= payload and mn < upper):
-                    return False
-                continue
-            op, v = payload
             try:
-                if op in ("=", "=="):
-                    if not (mn <= v and mx >= v):
-                        return False
-                elif op == ">":
-                    if not mx > v:
-                        return False
-                elif op == ">=":
-                    if not mx >= v:
-                        return False
-                elif op == "<":
-                    if not mn < v:
-                        return False
-                elif op == "<=":
-                    if not mn <= v:
-                        return False
+                if not all(P.CMP[op](b[bound], v) for bound, op, v, _ in tests):
+                    return False
             except TypeError:
                 raise _PyPruneBail()
         return True
@@ -1539,89 +1196,37 @@ class _PyPruneBail(Exception):
     pass
 
 
-def _prune_files_by_stats(spark, info, files, conjuncts, allowed_cols):
+def _prune_files_by_stats(spark, info, files, atoms, allowed_cols):
     """Delta-style data skipping (beyond the reference — its
     DataFileInfo has no column stats): keep only files whose footer
-    min/max could satisfy every analyzable conjunct ``col <op>
-    literal``. A file lacking bounds for a column passes that conjunct
-    (coalesce(.., true)); the evaluation happens in a tiny driver-side
-    DataFrame so literal casting follows Spark's own coercion rules,
-    the same technique _prune_partitions_sql uses. The all-Python fast
-    path above answers first wherever its narrower literal envelope
-    provably matches that coercion."""
-    fast = _try_prune_python(info, files, conjuncts, allowed_cols)
+    min/max (and null counts) could satisfy every analyzable atom. A
+    file lacking bounds for a column passes that atom (coalesce(..,
+    true)); the evaluation happens in a tiny driver-side DataFrame so
+    literal casting follows Spark's own coercion rules, like the Spark
+    arm of _prune_partitions_sql. The all-Python fast path above
+    answers first wherever its narrower literal envelope provably
+    matches that coercion."""
+    fast = _try_prune_python(info, files, atoms, allowed_cols)
     if fast is not None:
         return fast
-    schema_types = {f.name: f.dataType for f in _schema(info).fields}
+    types = _types(info)
     conds = []
     need_cols = set()
     null_cols = set()
-    for c in conjuncts:
-        mn_ = _IS_NULL_RE.match(c)
-        if mn_:
-            col, neg = mn_.group(1), bool(mn_.group(2))
-            if col not in allowed_cols or col not in schema_types:
-                continue
-            # footer null counts: `IS NULL` skips files with zero nulls
-            # in the column; `IS NOT NULL` skips files that are ALL
-            # null (null count == row count). Unknown counts pass.
-            if neg:
-                conds.append(f"coalesce(`_nulls_{col}` < `_rows`, true)")
-            else:
-                conds.append(f"coalesce(`_nulls_{col}` > 0, true)")
+    for col, kind, tests in _stats_tests(info, atoms, allowed_cols):
+        # footer null counts: `IS NULL` skips files with zero nulls in
+        # the column; `IS NOT NULL` skips files that are ALL null (null
+        # count == row count). Unknown counts pass.
+        if kind == "null":
+            conds.append(f"coalesce(`_nulls_{col}` > 0, true)")
             null_cols.add(col)
-            continue
-        mi = _IN_LIST_RE.match(c)
-        if mi:
-            col, body = mi.group(1), mi.group(2)
-            items = [x.strip() for x in body.split(",") if x.strip()]
-            def _is_literal(x: str) -> bool:
-                if x.startswith("'"):
-                    return True
-                if _IDENT_RE.search(x):
-                    return bool(re.match(
-                        r"^(DATE|TIMESTAMP|TRUE|FALSE)\b", x, re.IGNORECASE))
-                return True
-            if (col in allowed_cols and col in schema_types and items
-                    and all(_is_literal(x) for x in items)):
-                lits = ", ".join(items)
-                mn, mx = f"`_min_{col}`", f"`_max_{col}`"
-                # range check against the list's envelope: a file whose
-                # [min,max] misses [least,greatest] can't hold any member
-                conds.append(
-                    f"coalesce({mn} <= greatest({lits}) AND "
-                    f"{mx} >= least({lits}), true)")
-                need_cols.add(col)
-            continue
-        ml = _LIKE_PREFIX_RE.match(c)
-        if ml:
-            col, prefix = ml.group(1), ml.group(2)
-            upper = _like_prefix_upper(prefix)
-            if (col in allowed_cols
-                    and isinstance(schema_types.get(col), T.StringType)
-                    and upper is not None):
-                mn, mx = f"`_min_{col}`", f"`_max_{col}`"
-                conds.append(
-                    f"coalesce({mx} >= '{prefix}' AND {mn} < '{upper}', true)")
-                need_cols.add(col)
-            continue
-        m = _CONJ_CMP_RE.match(c)
-        if not m:
-            continue
-        col, op, lit = m.group(1), m.group(2), m.group(3)
-        if col not in allowed_cols or col not in schema_types:
-            continue
-        if _IDENT_RE.search(lit) and not re.match(
-                r"^\s*(DATE|TIMESTAMP|INTERVAL|TRUE|FALSE)\b", lit, re.IGNORECASE):
-            continue  # column-vs-column or function call: not analyzable
-        mn, mx = f"`_min_{col}`", f"`_max_{col}`"
-        if op in ("=", "=="):
-            conds.append(f"coalesce({mn} <= {lit} AND {mx} >= {lit}, true)")
-        elif op in (">", ">="):
-            conds.append(f"coalesce({mx} {op} {lit}, true)")
-        else:  # < / <=
-            conds.append(f"coalesce({mn} {op} {lit}, true)")
-        need_cols.add(col)
+        elif kind == "notnull":
+            conds.append(f"coalesce(`_nulls_{col}` < `_rows`, true)")
+            null_cols.add(col)
+        else:
+            conds.append("coalesce(" + " AND ".join(
+                f"`_{b}_{col}` {op} {sql}" for b, op, _, sql in tests) + ", true)")
+            need_cols.add(col)
     if not conds:
         return files
     amap = alias_map(info)
@@ -1653,60 +1258,40 @@ def _prune_files_by_stats(spark, info, files, conjuncts, allowed_cols):
     pdf = local_df(spark,
         [[r.get(f.name) for f in fields] for r in rows], T.StructType(fields))
     for c in need_cols:
-        pdf = (pdf.withColumn(f"_min_{c}", F.col(f"_min_{c}").cast(schema_types[c]))
-                  .withColumn(f"_max_{c}", F.col(f"_max_{c}").cast(schema_types[c])))
+        pdf = (pdf.withColumn(f"_min_{c}", F.col(f"_min_{c}").cast(types[c]))
+                  .withColumn(f"_max_{c}", F.col(f"_max_{c}").cast(types[c])))
     keep = {r["_idx"] for r in pdf.filter(F.expr(" AND ".join(conds))).collect()}
     return [f for i, f in enumerate(files) if i in keep]
 
 
-def _prune_files_by_bloom(info, table_path, files, conjuncts, allowed_cols):
+def _prune_files_by_bloom(info, table_path, files, atoms, allowed_cols):
     """File-level Bloom skipping (operators/bloom.py): drop files whose
-    bitmap PROVES an equality/IN conjunct can't match. Runs after
+    bitmap PROVES an equality/IN atom can't match. Runs after
     min/max stats pruning — it's the layer that fires on point lookups
     over high-cardinality UNSORTED columns, where every file's [min,
     max] spans the domain and stats keep everything. Pure Python, zero
     Spark jobs: literals hash through the bit-exact murmur3 twin
     (_spark_hash_py, differentially pinned — bloom build uses the JVM's
     F.hash on the same double-hash family). Fail-open everywhere: no
-    bloom_ref / unparseable literal / non-ASCII string / missing
+    bloom_ref / no exact literal value / non-ASCII string / missing
     sidecar row ⇒ the file stays."""
     if not any(f.bloom_ref for f in files):
         return files
     from starlake_spark.operators import bloom as _bloom
 
-    schema_types = {f.name: f.dataType for f in _schema(info).fields}
+    types = _types(info)
     checks = []  # (col, [(h1, h2), ...]) — file dropped iff ALL absent
-    for c in conjuncts:
-        col, items = None, None
-        m = _CONJ_CMP_RE.match(c)
-        if m and m.group(2) in ("=", "=="):
-            col, items = m.group(1), [m.group(3)]
-        else:
-            mi = _IN_LIST_RE.match(c)
-            if mi:
-                col = mi.group(1)
-                items = [x.strip() for x in mi.group(2).split(",") if x.strip()]
-        if col is None or not items:
-            continue
-        dt = schema_types.get(col)
-        if col not in allowed_cols or dt is None \
+    for a in atoms:
+        dt = types[a.col]
+        if a.op not in ("=", "in") or a.col not in allowed_cols \
                 or not isinstance(dt, _bloom._ELIGIBLE):
             continue
-        hashes = []
-        ok = True
-        for lit in items:
-            v = _parse_bucket_lit(lit, dt)
-            if v is _FALLBACK:
-                ok = False
-                break
-            h1 = _spark_hash_py([v], [dt])
-            h2 = _spark_hash_py([v, 1], [dt, T.IntegerType()])
-            if h1 is None or h2 is None:
-                ok = False
-                break
-            hashes.append((h1, h2))
-        if ok and hashes:
-            checks.append((col, hashes))
+        vals = [P.value(lit, dt) for lit in a.lits]
+        hashes = [(_spark_hash_py([v], [dt]),
+                   _spark_hash_py([v, 1], [dt, T.IntegerType()]))
+                  for v in vals if v is not P.FALLBACK]
+        if len(hashes) == len(vals) and all(None not in h for h in hashes):
+            checks.append((a.col, hashes))
     if not checks:
         return files
     amap = alias_map(info)
@@ -1812,30 +1397,31 @@ def scan(
             if c in keys:
                 raise ValueError(f"merge operator on partition/hash column '{c}'")
 
+    types = _types(info)
     if isinstance(partition_filter, str):
-        keep = _prune_partitions_sql(spark, info, list(snap.partitions), partition_filter)
+        keep = _prune_partitions_sql(spark, info, list(snap.partitions),
+                                     P.parse(partition_filter))
         partition_filter = lambda d, _keep=keep: d in _keep  # noqa: E731
 
-    # `where`: one predicate that (a) prunes partitions via its
-    # range-column conjuncts — the metadata/data predicate split of
-    # StarLakeUtils.scala:117-147 — (b) skips files via footer stats,
+    # `where` is parsed ONCE into typed atoms (operators/predicate.py).
+    # It (a) prunes partitions via its range-column atoms — the
+    # metadata/data predicate split of StarLakeUtils.scala:117-147 —
+    # (b) skips buckets and files via footer stats and blooms, and
     # (c) is ALWAYS re-applied row-level at the end, so (a)+(b) are
     # pure I/O savings with no correctness surface.
-    where_conjs = _conjuncts(where) if where else []
-    if where_conjs and info.range_cols:
-        fields = set(_schema(info).fieldNames())
-        # a conjunct whose column references are all range columns is a
-        # metadata-only predicate → evaluable against partition values
-        part_conjs = [
-            c for c in where_conjs
-            if ({i for i in _IDENT_RE.findall(c) if i in fields}
-                and {i for i in _IDENT_RE.findall(c) if i in fields}
-                <= set(info.range_cols))
-        ]
-        part_conjs += _generated_conjuncts(info, where_conjs)
-        if part_conjs:
+    pred = P.parse(where)
+    if info.range_cols and (pred.atoms or pred.others):
+        rc = set(info.range_cols)
+        # a left-over conjunct naming only range columns is a
+        # metadata-only predicate too: the Spark arm evaluates it
+        part = P.Pred(
+            tuple(a for a in pred.atoms if a.col in rc)
+            + tuple(_generated_conjuncts(info, pred.atoms)),
+            tuple(o for o in pred.others
+                  if (cols := o.refs.intersection(types)) and cols <= rc))
+        if part.atoms or part.others:
             keep2 = _prune_partitions_sql(
-                spark, info, list(snap.partitions), " AND ".join(part_conjs))
+                spark, info, list(snap.partitions), part)
             prev = partition_filter
             partition_filter = (
                 lambda d, _k=keep2, _p=prev: d in _k and (_p is None or _p(d)))
@@ -1866,34 +1452,34 @@ def scan(
         merge_files = merge_files + plain_files
         plain_files = []
 
-    if where_conjs and (plain_files or merge_files):
+    skip = P.prunable(pred.atoms, types)
+    if skip and (plain_files or merge_files):
         # bucket pruning: a full-key equality lookup touches exactly one
         # bucket's files per partition, an IN-list lookup at most one
         # per listed key (adopted bucket_id=-1 files pass)
-        bs = _buckets_for_lookup(spark, info, where_conjs)
+        bs = _buckets_for_lookup(spark, info, skip)
         if bs is not None:
             keep = bs | {-1}
             plain_files = [f for f in plain_files if f.bucket_id in keep]
             merge_files = [f for f in merge_files if f.bucket_id in keep]
 
-    if where_conjs:
-        all_cols = set(_schema(info).fieldNames())
+    if skip:
         if plain_files:
             # plain files: every row is final → any column's bounds skip
             plain_files = _prune_files_by_stats(
-                spark, info, plain_files, where_conjs, all_cols)
+                spark, info, plain_files, skip, types.keys())
             plain_files = _prune_files_by_bloom(
-                info, store.table_path, plain_files, where_conjs, all_cols)
+                info, store.table_path, plain_files, skip, types.keys())
         if merge_files:
             # MoR inputs: non-key columns change under the merge (a
             # skipped older version would alter sum/last results) — only
             # the groupBy keys survive identically, so only key-column
-            # conjuncts may skip pre-merge files.
+            # atoms may skip pre-merge files.
             key_cols = set(info.range_cols) | set(info.hash_cols)
             merge_files = _prune_files_by_stats(
-                spark, info, merge_files, where_conjs, key_cols)
+                spark, info, merge_files, skip, key_cols)
             merge_files = _prune_files_by_bloom(
-                info, store.table_path, merge_files, where_conjs, key_cols)
+                info, store.table_path, merge_files, skip, key_cols)
 
     if with_rowid and (merge_files or info.hash_cols):
         raise ValueError(
@@ -1940,11 +1526,5 @@ _SIZE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10,
 
 def _conf_bytes(spark: SparkSession, key: str) -> int:
     """A byte-size SQL conf in bytes (-1 = disabled or unparsable)."""
-    try:
-        raw = str(spark.conf.get(key))
-        m = _SIZE_RE.match(raw.strip().lower())
-        if not m:
-            return -1
-        return int(m.group(1)) * _SIZE_UNITS[m.group(2)]
-    except Exception:
-        return -1
+    m = _SIZE_RE.match(str(spark.conf.get(key)).strip().lower())
+    return int(m.group(1)) * _SIZE_UNITS[m.group(2)] if m else -1

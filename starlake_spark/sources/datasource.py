@@ -47,6 +47,7 @@ from pyspark.sql.datasource import (
 
 from starlake_spark.meta import (ManifestStore, MetaError,
                                  TableNotFoundError, decode_range_value)
+from starlake_spark.operators import predicate as P
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -115,27 +116,6 @@ class _FilePartition(InputPartition):
     tomb_mode: str = ""
 
 
-def _typed_part_value(v: str, dtype: T.DataType):
-    """Directory-encoded partition value string → python value of the
-    declared column type (range cols are NOT NULL by invariant)."""
-    import datetime
-    import decimal
-
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return int(v)
-    if isinstance(dtype, (T.FloatType, T.DoubleType)):
-        return float(v)
-    if isinstance(dtype, T.BooleanType):
-        return v.lower() == "true"
-    if isinstance(dtype, T.DateType):
-        return datetime.date.fromisoformat(v)
-    if isinstance(dtype, T.TimestampType):
-        return datetime.datetime.fromisoformat(v.replace(" ", "T"))
-    if isinstance(dtype, T.DecimalType):
-        return decimal.Decimal(v)
-    return v
-
-
 def _alias_pairs(store: ManifestStore) -> tuple:
     from starlake_spark.operators.reader import alias_map
 
@@ -152,7 +132,7 @@ def _file_partitions(store: ManifestStore, files, schema_types: dict,
     parts = []
     for f in files:
         consts = tuple(
-            (k, _typed_part_value(v, schema_types[k]))
+            (k, P.part_value(v, schema_types[k]))
             for k, v in decode_range_value(f.range_value).items()
             if k in schema_types
         )
@@ -979,75 +959,40 @@ def _collect_file_infos(table_path: str, info, messages, cast_types,
 
 def _parse_replace_where(pred_text: str, info):
     """Pure-python replaceWhere evaluator for the V2 write path (no
-    SparkSession exists in the DataSource worker): conjunctions of
-    ``<range_col> <op> <literal>`` with ops = != < <= > >=, column
-    names resolved case-insensitively against the range columns
-    (reference 'replaceWhere predicate should be case insensitive').
-    Anything richer routes to StarTable.write(replace_where=...), which
-    evaluates arbitrary SQL. Returns pred(range_value_str) -> bool."""
-    import json as _json
-    import re as _re
-
-    import pyspark.sql.types as _T
-
-    schema = _T.StructType.fromJson(_json.loads(info.schema_json))
-    types = {f.name: f.dataType for f in schema.fields}
+    SparkSession exists in the DataSource worker): the predicate's
+    atoms (operators/predicate.py) on range columns, resolved
+    case-insensitively (reference 'replaceWhere predicate should be
+    case insensitive'), through the exact partition evaluator. A
+    left-over conjunct, or a literal without an exact value for its
+    column, is refused: StarTable.write(replace_where=...) evaluates
+    arbitrary SQL. Returns pred(range_value_str) -> bool."""
+    pred = P.parse(pred_text)
     by_lower = {c.lower(): c for c in info.range_cols}
-    atoms = []
-    for part in _re.split(r"(?i)\s+and\s+", pred_text.strip()):
-        m = _re.match(r"^\s*`?(\w+)`?\s*(<=|>=|!=|<>|=|<|>)\s*"
-                      r"('[^']*'|\S+)\s*$", part)
-        if not m:
+    for a in pred.atoms:
+        if a.col.lower() not in by_lower:
             raise ValueError(
-                f"format('star') replaceWhere supports conjunctions of "
-                f"<range column> <op> <literal>; got {part!r} — use "
-                "StarTable.write(replace_where=...) for arbitrary SQL")
-        col, op, lit = m.groups()
-        rc = by_lower.get(col.lower())
-        if rc is None:
-            raise ValueError(
-                f"replaceWhere column '{col}' is not a range partition "
+                f"replaceWhere column '{a.col}' is not a range partition "
                 f"column (partitions: {list(info.range_cols)})")
-        if lit.startswith("'"):
-            val = lit[1:-1]
-        else:
-            val = lit
-        t = types[rc]
-        if isinstance(t, (_T.ByteType, _T.ShortType, _T.IntegerType,
-                          _T.LongType)):
-            cast = int
-        elif isinstance(t, (_T.FloatType, _T.DoubleType)):
-            cast = float
-        elif isinstance(t, _T.DecimalType):
-            # lexical comparison would order '10.00' < '9.00' and
-            # mismatch '3' vs '3.00' — compare as decimals
-            from decimal import Decimal as cast  # noqa: N813
-        elif isinstance(t, _T.BooleanType):
-            def cast(v):  # noqa: E306
-                return str(v).lower() in ("true", "1")
-        else:
-            cast = str
-        atoms.append((rc, op, cast(val), cast))
+    types = {f.name: f.dataType for f in
+             T.StructType.fromJson(json.loads(info.schema_json)).fields}
+    match = P.partition_matcher(
+        [a._replace(col=by_lower[a.col.lower()]) for a in pred.atoms],
+        types) if pred.atoms and pred.complete else None
+    if match is None:
+        bad = pred.others[0].text if pred.others else pred_text
+        raise ValueError(
+            f"format('star') replaceWhere supports conjunctions of "
+            f"<range column> <op> <literal>; got {bad!r} — use "
+            "StarTable.write(replace_where=...) for arbitrary SQL")
 
-    def pred(range_value: str) -> bool:
+    def matches(range_value: str) -> bool:
         # keys compare case-insensitively: a range_value built from a
         # different declared casing (first-write adoption) still matches
-        vals = {kv.partition("=")[0].lower(): kv.partition("=")[2]
-                for kv in range_value.split(",")
-                if kv} if range_value else {}
-        for rc, op, want, cast in atoms:
-            if rc.lower() not in vals:
-                return False
-            have = cast(vals[rc.lower()])
-            ok = {"=": have == want, "!=": have != want,
-                  "<>": have != want, "<": have < want,
-                  "<=": have <= want, ">": have > want,
-                  ">=": have >= want}[op]
-            if not ok:
-                return False
-        return True
+        return match({by_lower[k.lower()]: v
+                      for k, v in decode_range_value(range_value).items()
+                      if k.lower() in by_lower})
 
-    return pred
+    return matches
 
 
 class _StarBatchWriter(DataSourceArrowWriter):
@@ -1375,7 +1320,7 @@ def read_star(
     dv_infos = [d for ps in snap.partitions.values() for d in ps.dv_files]
     if partition_filter:
         keep = rd._prune_partitions_sql(spark, info, list(snap.partitions),
-                                        partition_filter)
+                                        P.parse(partition_filter))
         files = [
             f for f in files
             if decode_range_value(f.range_value) in keep

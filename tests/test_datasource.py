@@ -877,3 +877,19 @@ def test_first_write_replace_where_violation_leaves_no_table(spark, tmp_path):
 
     with pytest.raises(KeyError):
         catalog.resolve("rw_orphan_probe")
+
+
+def test_replace_where_literal_with_and_inside_quotes(spark, tmp_path):
+    """replaceWhere splits at top-level ANDs only: `r = 'x and y'` is
+    one comparison, not two broken halves."""
+    path = str(tmp_path / "rq")
+    df = spark.createDataFrame(
+        [(1, "x and y"), (2, "z")], "id int, r string")
+    df.write.format("star").mode("overwrite") \
+        .option("rangePartitions", "r").save(path)
+    spark.createDataFrame([(3, "x and y")], "id int, r string") \
+        .write.format("star").mode("overwrite") \
+        .option("replaceWhere", "r = 'x and y'").save(path)
+    got = spark.read.format("star").load(path)
+    assert sorted((r.id, r.r) for r in got.collect()) == \
+        [(2, "z"), (3, "x and y")]

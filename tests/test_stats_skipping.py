@@ -406,20 +406,26 @@ def test_partition_prune_python_path_matches_spark(spark):
     result) — differential over the supported forms, and provable
     bail-out (None) on the unsupported ones."""
     from starlake_spark.meta import TableInfo
+    from starlake_spark.operators import predicate as P
     from starlake_spark.operators import reader as R
 
     info = TableInfo(
-        table_path="/tmp/x", table_id="t", range_cols=["day", "seg", "n"],
+        table_path="/tmp/x", table_id="t",
+        range_cols=["day", "seg", "n", "amt", "flag"],
         hash_cols=[], bucket_num=-1,
         schema_json='{"type":"struct","fields":['
                     '{"name":"day","type":"date","nullable":true,"metadata":{}},'
                     '{"name":"seg","type":"string","nullable":true,"metadata":{}},'
                     '{"name":"n","type":"integer","nullable":true,"metadata":{}},'
+                    '{"name":"amt","type":"decimal(10,2)","nullable":true,"metadata":{}},'
+                    '{"name":"flag","type":"boolean","nullable":true,"metadata":{}},'
                     '{"name":"v","type":"double","nullable":true,"metadata":{}}]}',
         configuration={})
-    rvs = [f"day=2024-01-{d:02d},seg={s},n={i}"
-           for i, (d, s) in enumerate([(1, "A"), (5, "B"), (9, "A"),
-                                       (12, "C"), (20, "B")])]
+    rvs = [f"day=2024-01-{d:02d},seg={s},n={i},amt={a},flag={f}"
+           for i, (d, s, a, f) in enumerate([
+               (1, "A", "9.50", "true"), (5, "B", "10.00", "false"),
+               (9, "A", "3.00", "true"), (12, "C", "100.25", "false"),
+               (20, "B", "10.5", "true")])]
     preds = [
         "day >= to_date(TIMESTAMP '2024-01-04 12:00:00')",
         "`day` >= to_date(TIMESTAMP '2024-01-05 00:00:00') AND "
@@ -429,23 +435,30 @@ def test_partition_prune_python_path_matches_spark(spark):
         "day = DATE '2024-01-09'",
         "n < 3",
         "day IS NOT NULL",
+        "seg = 'A' OR seg = 'B'",
+        "amt > 9.5",
+        "amt = 10",
+        "amt IN (3, 100.25) AND flag = true",
+        "amt BETWEEN '9.5' AND 10.50",
+        "flag = false",
+        "flag != true AND seg <> 'C'",
     ]
     for p in preds:
         rows = [R.decode_range_value(rv) for rv in rvs]
-        fast = R._try_prune_partitions_python(info, rows, p)
+        fast = R._try_prune_partitions_python(info, rows, P.parse(p))
         assert fast is not None, f"fast path must handle: {p}"
         slow_in = R._try_prune_partitions_python
         R._try_prune_partitions_python = lambda *a: None  # force Spark path
         try:
-            slow = R._prune_partitions_sql(spark, info, rvs, p)
+            slow = R._prune_partitions_sql(spark, info, rvs, P.parse(p))
         finally:
             R._try_prune_partitions_python = slow_in
         assert fast == slow, (p, fast, slow)
     # unsupported forms bail rather than approximate
     rows = [R.decode_range_value(rv) for rv in rvs]
-    for p in ["seg = 'A' OR seg = 'B'", "upper(seg) = 'A'",
-              "n + 1 > 2", "seg RLIKE 'x'"]:
-        assert R._try_prune_partitions_python(info, rows, p) is None, p
+    for p in ["seg = 'A' OR n = 2", "upper(seg) = 'A'",
+              "n + 1 > 2", "seg RLIKE 'x'", "seg = 5"]:
+        assert R._try_prune_partitions_python(info, rows, P.parse(p)) is None, p
 
 
 def test_like_prefix_pruning(spark, orders, tmp_path):
@@ -549,3 +562,77 @@ def test_or_with_and_precedence_never_loses_rows(spark, orders, tmp_path):
     pred = (f"o_orderkey = 3 OR o_custkey = {row['o_custkey']} "
             f"AND o_orderkey = 1400")
     assert t.to_df(where=pred).count() == orders.filter(pred).count() >= 1
+
+
+def test_numeric_literal_on_string_column_never_prunes(spark, tmp_path):
+    """`k = 5` on a STRING column: Spark casts the COLUMN to a number,
+    so '05' matches as well as '5'. Hashing '5' for the bucket, or
+    comparing string-ordered footer bounds as numbers, drops matching
+    rows; such atoms must skip nothing and leave the row filter to
+    decide."""
+    keys = sorted({f"{i:02d}" for i in range(40)} | {str(i) for i in range(40)})
+    df = spark.createDataFrame([(k, i) for i, k in enumerate(keys)],
+                               "k string, v int")
+    hashed = create_table(spark, df, str(tmp_path / "h"),
+                          hash_partitions=["k"], hash_bucket_num=4)
+    plain = create_table(spark, df, str(tmp_path / "p"),
+                         configuration={"write.files.per.partition": "8"})
+    plain.compaction(sort_columns=["k"], target_files=8)
+    assert len(plain.store.snapshot().all_files()) > 1
+    cases = [(hashed, "k = 5"), (hashed, "k = 15"), (hashed, "k IN (5, 7)"),
+             (hashed, "k > 38"), (plain, "k < 3"), (plain, "k = 5")]
+    for t, pred in cases:
+        got = sorted(r.k for r in t.to_df(where=pred).collect())
+        want = sorted(r.k for r in t.to_df().filter(pred).collect())
+        assert got == want and want, (pred, got, want)
+    # a string literal is cast to the column's type: still prunes
+    assert len(hashed.to_df(where="k = '05'").inputFiles()) < \
+        len(hashed.to_df().inputFiles())
+
+
+def test_stats_prune_python_path_matches_spark(spark, orders, tmp_path):
+    """The in-process stats pruner must keep exactly the files the
+    Spark-coercion path keeps, over one multi-file table and every atom
+    shape the parser produces."""
+    from starlake_spark.operators import predicate as P
+    from starlake_spark.operators import reader as R
+
+    t = create_table(
+        spark, orders.withColumn("ck_s", F.col("o_custkey").cast("string")),
+        str(tmp_path / "t"), configuration={"write.files.per.partition": "8"})
+    t.compaction(sort_columns=["o_orderkey"], target_files=8)
+    info = t.store.table_info()
+    files = t.store.snapshot().all_files()
+    assert len(files) > 1
+    types = R._types(info)
+    preds = [
+        "o_orderkey < 100",
+        "o_orderkey >= 5000 AND o_totalprice > 1000.5",
+        "o_orderkey = 33",
+        "o_orderkey IN (5, 6, 7)",
+        "o_orderkey BETWEEN 10 AND 40",
+        "o_orderkey NOT BETWEEN 10 AND 40",
+        "o_orderpriority LIKE '1-%'",
+        "o_orderstatus IS NULL",
+        "o_orderstatus IS NOT NULL AND o_orderkey <= 3",
+        "(o_orderkey = 5 OR o_orderkey = 7)",
+        "`o_orderkey` < 100 AND `o_orderstatus` = 'F'",
+        "o_orderpriority = 'x or y' AND o_orderkey > 10",
+        "o_orderstatus = 'a and b'",
+        "o_orderdate >= DATE '1996-01-01' AND o_orderdate < '1996-02-01'",
+        "ck_s < 300",
+        "ck_s = 5",
+    ]
+    for p in preds:
+        atoms = P.prunable(P.parse(p).atoms, types)
+        fast = R._try_prune_python(info, files, atoms, types.keys())
+        assert fast is not None, f"fast path must handle: {p}"
+        slow_in = R._try_prune_python
+        R._try_prune_python = lambda *a: None  # force the Spark path
+        try:
+            slow = R._prune_files_by_stats(spark, info, files, atoms, types.keys())
+        finally:
+            R._try_prune_python = slow_in
+        assert [f.path for f in fast] == [f.path for f in slow], p
+        want = t.to_df().filter(p).count()
+        assert t.to_df(where=p).count() == want, p
